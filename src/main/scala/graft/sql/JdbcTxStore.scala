@@ -1,8 +1,6 @@
 package graft.sql
 
-import java.sql.{Connection, PreparedStatement, SQLIntegrityConstraintViolationException}
-
-import scala.collection.mutable
+import java.sql.{BatchUpdateException, Connection, PreparedStatement, SQLException}
 
 import graft.cdc.Checkpoint
 import graft.streaming.CdcApplier
@@ -14,14 +12,20 @@ import graft.streaming.CdcApplier
   * the SAME database transaction as the data it covers — the applier's
   * exactly-once contract needs nothing else from the target.
   *
-  * Dialect seam: against PostgreSQL the multi-VALUES insert carries
-  * `ON CONFLICT (keys) DO NOTHING` natively (`onConflictSupported =
-  * true`); targets without it (embedded Derby in the tests) take the
-  * optimistic path — the plain multi-VALUES insert runs first, and
-  * only a duplicate-key violation (SQLState 23505, statement-level
-  * rollback, transaction intact) downgrades that one batch to per-row
-  * exists-checked inserts. Replay batches are the only ones that pay
-  * the slow path; steady-state cost is one statement per insert run.
+  * Insert path: every run of same-table inserts is one JDBC batch of a
+  * prepared single-row INSERT, one `executeBatch()` per run whatever
+  * its length. Against PostgreSQL the statement carries `ON CONFLICT
+  * (keys) DO NOTHING` natively (`onConflictSupported = true`), and the
+  * target's JDBC URL should set `reWriteBatchedInserts=true` so the
+  * driver folds the batch back into multi-VALUES statements (the
+  * reference's shape, pkg/sink/postgres.go:395-470). Targets without
+  * ON CONFLICT (embedded Derby in the tests) take the optimistic path
+  * — the plain batch runs first, and only a duplicate-key violation
+  * (SQLState 23505, statement-level rollback, transaction intact)
+  * downgrades that one run to per-row exists-checked inserts; the
+  * elements the batch ran before the duplicate are skipped by the
+  * exists-check like any other present key. Replay runs are the only
+  * ones that pay the slow path.
   *
   * DIALECT REQUIREMENT: the optimistic path assumes STATEMENT-level
   * rollback — the transaction must stay usable after a failed
@@ -45,9 +49,10 @@ final class JdbcTxStore(conn: Connection,
   conn.setAutoCommit(false)
   ensureWatermarkTable()
 
-  // LRU-bounded: insert SQL varies by batch size (1..2500 value
-  // tuples), so an unbounded cache would hold one server-side prepared
-  // statement per distinct size for the connection's lifetime
+  // LRU-bounded: insert SQL is one statement per column signature, but
+  // UPDATE SQL varies with the set of SET columns and with which key
+  // values are NULL, so an unbounded cache would hold one server-side
+  // prepared statement per distinct shape for the connection's lifetime
   private val MaxCachedStatements = 256
   private val stmts = new java.util.LinkedHashMap[String, PreparedStatement](
     64, 0.75f, /*accessOrder=*/ true) {
@@ -60,7 +65,7 @@ final class JdbcTxStore(conn: Connection,
   }
   var commits = 0
   var rollbacks = 0
-  /** Test hook mirroring [[graft.streaming.InMemoryTxStore]]: throw
+  /** Test hook mirroring the tests' `InMemoryTxStore`: throw
     * inside the Nth commit to simulate a crash before the database
     * commit lands. */
   var failOnCommit: Int = -1
@@ -180,44 +185,57 @@ final class JdbcTxStore(conn: Connection,
 
   private def insertSlice(schema: String, table: String, cols: Seq[String],
       rows: Seq[Map[String, Any]], keyCols: Seq[String]): Unit = {
-    val sql = SqlBuilder.insertQuery(SqlBuilder.InsertOption(
-      schema, table, cols, rows.size,
+    // one single-row statement per (table, column signature), run as a
+    // JDBC batch: its SQL does not grow with the run, so it compiles
+    // once per signature, and Derby's recursive compiler, which
+    // overflows a 1 MiB thread stack on a 2,500-tuple VALUES list,
+    // never sees a long one
+    val ps = prepared(SqlBuilder.insertQuery(SqlBuilder.InsertOption(
+      schema, table, cols, 1,
       keys = if (onConflictSupported) keyCols else Seq.empty,
-      pgVersion = pgVersion, style = SqlBuilder.JdbcParams))
-    val ps = prepared(sql)
-    var i = 1
-    rows.foreach(r => cols.foreach { c => bind(ps, i, r(c)); i += 1 })
-    if (onConflictSupported || keyCols.isEmpty) { ps.executeUpdate(); return }
-    try ps.executeUpdate()
-    catch {
-      case dup: SQLIntegrityConstraintViolationException =>
-        // replay overlap: the statement rolled back, the tx did not —
-        // re-apply this batch row-at-a-time, skipping existing keys
+      pgVersion = pgVersion, style = SqlBuilder.JdbcParams)))
+    def bindRow(r: Map[String, Any]): Unit = {
+      var i = 1
+      cols.foreach { c => bind(ps, i, r(c)); i += 1 }
+    }
+    try {
+      rows.foreach { r => bindRow(r); ps.addBatch() }
+      ps.executeBatch()
+    } catch {
+      case e: SQLException =>
+        ps.clearBatch() // the cached statement must not carry stale rows
+        val dup = duplicateKey(e)
+        if (dup == null || onConflictSupported || keyCols.isEmpty) throw e
+        // replay overlap: the elements before the duplicate already ran
+        // inside the tx, the tx itself is intact — re-apply this run
+        // row-at-a-time, skipping every key that now exists
         var progressed = false // any fallback statement completed?
         try {
           rows.foreach { r =>
             val exists = keyExists(schema, table, keyCols, r)
             progressed = true
-            if (!exists) {
-              val one = prepared(SqlBuilder.insertQuery(SqlBuilder.InsertOption(
-                schema, table, cols, 1, pgVersion = pgVersion,
-                style = SqlBuilder.JdbcParams)))
-              var j = 1
-              cols.foreach { c => bind(one, j, r(c)); j += 1 }
-              one.executeUpdate()
-            }
+            if (!exists) { bindRow(r); ps.executeUpdate() }
           }
         } catch {
-          case e: java.sql.SQLException if !progressed =>
+          case e2: SQLException if !progressed =>
             // the very first fallback statement failed too: the
             // transaction is poisoned (a dialect without statement-level
             // rollback, e.g. PG with onConflictSupported left false) —
             // surface the ORIGINAL violation as the root cause
-            dup.addSuppressed(e)
+            dup.addSuppressed(e2)
             throw dup
         }
     }
   }
+
+  /** The duplicate-key violation (SQLState 23505) that failed a batch,
+    * or null: Derby hangs it on the [[BatchUpdateException]]'s cause,
+    * the PostgreSQL driver on its next-exception chain. */
+  private def duplicateKey(e: SQLException): SQLException =
+    Iterator(e, e.getCause, e.getNextException).collectFirst {
+      case s: SQLException if !s.isInstanceOf[BatchUpdateException] &&
+        s.getSQLState == "23505" => s
+    }.orNull
 
   private def keyExists(schema: String, table: String, keyCols: Seq[String],
       row: Map[String, Any]): Boolean = {

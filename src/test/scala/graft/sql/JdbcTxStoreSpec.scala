@@ -107,7 +107,7 @@ class JdbcTxStoreSpec extends TxStoreContract {
           oids, lsn, 1)
       }
       // inserts into t, switch to audit, back to t, then update + delete —
-      // every switch must flush the pending multi-VALUES batch in order
+      // every switch must flush the pending insert batch in order
       CdcApplier.applyBatch(h.store, "s", Seq(
         c("INSERT", "test_table", 1, 1, 10),
         c("INSERT", "test_table", 2, 2, 20),
@@ -151,6 +151,49 @@ class JdbcTxStoreSpec extends TxStoreContract {
       s.commit()
       assert(h.rows("public.test_table").map(_("id")).toSet ==
         (1 to 6).map(_.toLong).toSet)
+    }
+    withHarness { h =>
+      val s = h.store
+      def run(ids: Range, v: Int => Int): Unit = {
+        s.begin()
+        s.insertMany("public", "test_table",
+          ids.map(i => Map[String, Any]("id" -> i.toLong, "v" -> v(i))), Seq("id"))
+        s.commit()
+      }
+      run(1 to 2, identity)
+      run(5 to 6, identity)
+      // mid-run duplicate: the batch runs 3 and 4 before failing on 5;
+      // the fallback must skip them as present, keep 5 and 6's old v
+      // (ON CONFLICT DO NOTHING) and add 7 and 8 exactly once
+      run(3 to 8, _ * 100)
+      assert(h.rows("public.test_table").map(r => (r("id"), r("v"))).toSet ==
+        Set((1L, 1), (2L, 2), (3L, 300), (4L, 400), (5L, 5), (6L, 6),
+          (7L, 700), (8L, 800)))
+      // the statement the fallback reused carries no stale batch rows
+      run(9 to 10, identity)
+      assert(h.rows("public.test_table").map(_("id")).toSet ==
+        (1 to 10).map(_.toLong).toSet)
+    }
+  }
+
+  test("a 2,500-row insert run commits on a 1 MiB thread stack") {
+    withHarness { h =>
+      val s = h.store
+      var failure: Throwable = null
+      // the applier's largest run, on the stack size a stream-execution
+      // thread gets by default
+      val t = new Thread(null, () => {
+        try {
+          s.begin()
+          s.insertMany("public", "test_table",
+            (1 to 2500).map(i => Map[String, Any]("id" -> i.toLong, "v" -> i)),
+            Seq("id"))
+          s.commit()
+        } catch { case e: Throwable => failure = e }
+      }, "insert-1mib-stack", 1L << 20)
+      t.start(); t.join()
+      if (failure != null) throw failure
+      assert(h.rows("public.test_table").size == 2500)
     }
   }
 
