@@ -1,76 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.bench.{BenchRecord, Measure}
+import java.nio.file.Files
 
 /** Benchmark harness: runs every query in stable (name-sorted) order,
-  * forcing full execution through the `noop` sink so projections and
-  * global sorts are NOT optimized away (a bare `.count()` lets
-  * EliminateSorts drop every orderBy and column pruning delete the
-  * projections under test). A warmup pass on the flagship query absorbs
-  * JVM/codegen startup so per-query numbers are comparable across rounds.
+  * one [[Measure.pass]] each (fully executed through the `noop` sink).
+  * A warmup pass on the flagship query absorbs JVM/codegen startup so
+  * per-query numbers are comparable across rounds.
   */
 object Bench {
-  /** Aggregate (busy, steal) jiffies from `/proc/stat`'s first line —
-    * busy = user+system across all CPUs, steal = time the hypervisor
-    * ran somebody else's VM while ours was runnable. A run-level steal
-    * delta makes host contention visible inside the bench record
-    * itself: rounds 6-9 each saw 1.3-2.5x drift on identical code, and
-    * proving it was co-tenant load (not a regression) took a
-    * same-HEAD A/B every time. None on non-Linux / unreadable.
-    */
-  private def cpuTicks(): Option[(Long, Long)] =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try src.getLines().find(_.startsWith("cpu ")).map { l =>
-        val f = l.trim.split("\\s+").drop(1).map(_.toLong)
-        (f(0) + f(2), if (f.length > 7) f(7) else 0L)
-      } finally src.close()
-    } catch { case _: Exception => None }
-
-  /** 1-minute load average from `/proc/loadavg` — the run-queue depth
-    * steal_pct misses. The r10 verdict's q138 case (8.9 s vs 21.3 s at
-    * equally low steal) showed same-host contention from sibling
-    * PROCESSES (not sibling VMs) inflating trigger-heavy queries while
-    * steal stayed flat; a loadavg far above this JVM's own core count
-    * at either end of the run marks the record as contended. None on
-    * non-Linux / unreadable.
-    */
-  private def loadAvg(): Option[Double] =
-    try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      try src.getLines().nextOption().map(_.split("\\s+")(0).toDouble)
-      finally src.close()
-    } catch { case _: Exception => None }
-
-  /** HOST core count for the loadavg cap. /proc/loadavg counts ALL
-    * host runnables, so the cap must scale by the host's cores —
-    * `availableProcessors()` is the JVM/cgroup-visible count, which in
-    * a container pinned to SPARK_GRAFT_CPUS vCPUs collapses the cap to
-    * a constant while loadavg stays host-wide (ADVICE r13). cgroups
-    * limit scheduling but do not mask /proc/cpuinfo, so counting its
-    * `processor` stanzas recovers the host view; fall back to the JVM
-    * count when unreadable (non-Linux). */
-  private def hostCores(): Int =
-    (try {
-      val src = scala.io.Source.fromFile("/proc/cpuinfo")
-      try Some(src.getLines().count(_.startsWith("processor")))
-      finally src.close()
-    } catch { case _: Exception => None })
-      .filter(_ > 0)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession(cpus, "graft-bench")
 
     // Fail fast on a mistyped query name — exec's catch-all would
     // otherwise report it as -1.0 and silently bench nothing.
@@ -80,37 +22,20 @@ object Bench {
       sys.exit(2)
     }
 
-    // Per-pass steal window (VERDICT r15 ask #3b): /proc/stat deltas
-    // around the timed action stamp each measurement with the steal
-    // share of ITS OWN window, so a partially-contended run still
-    // contributes provably-clean per-query timings (recorded in
-    // last_run.json "passes"/"query_steal") instead of poisoning
-    // cross-round comparison silently. Timing methodology is
-    // untouched — the stamp is metadata, the reported value is still
-    // the same min-of-passes wall time. −1.0 = window unmeasurable.
-    def exec(name: String): (Double, Double) = {
-      // settle the heap between queries: without this, one query's
-      // garbage lands as a multi-second GC pause inside whichever
-      // query runs next — per-query numbers wandered ±3s run to run
-      System.gc()
-      val w0 = cpuTicks()
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      catch { case e: Throwable =>
+    // (seconds, steal % of the pass's own window; VERDICT r15 ask #3b):
+    // a partially-contended run still contributes provably-clean
+    // per-query timings (last_run.json "passes"/"query_steal").
+    // −1.0 = window unmeasurable.
+    def exec(name: String): (Double, Double) =
+      try {
+        val (seconds, steal) = Measure.pass(spark, sfDir, name)
+        (seconds, steal.getOrElse(-1.0))
+      } catch { case e: Throwable =>
         // -1.0 marks the break in the JSON, but the WHY must not cost
         // a round to recover (r6: q79's analysis error hid here).
         System.err.println(s"[bench] $name failed: $e")
-        return (-1.0, -1.0)
+        (-1.0, -1.0)
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val st = (for ((b0, s0) <- w0; (b1, s1) <- cpuTicks()) yield {
-        val (busy, steal) = (b1 - b0, s1 - s0)
-        if (busy + steal > 0)
-          math.round(10000.0 * steal / (busy + steal)) / 100.0 else 0.0
-      }).getOrElse(-1.0)
-      (dt, st)
-    }
 
     // Warmup doubling as the CONTENTION PROBE (r11 ask #3): steal is
     // only visible while OUR vCPUs are runnable (an idle VM is never
@@ -125,39 +50,29 @@ object Bench {
       // loadavg BEFORE the warmup: the 1-min average must measure the
       // pre-existing (sibling) load, not the warmup's own burst —
       // otherwise the gate self-triggers on its probe
-      val load = loadAvg().getOrElse(0.0)
-      val t0 = cpuTicks()
-      exec("q01_pricing_summary")._1: Unit
-      val pct = (for ((b0, s0) <- t0; (b1, s1) <- cpuTicks()) yield {
-        val (busy, steal) = (b1 - b0, s1 - s0)
-        if (busy + steal > 0)
-          math.round(10000.0 * steal / (busy + steal)) / 100.0 else 0.0
-      }).getOrElse(0.0)
-      (pct, load)
+      val load = Measure.loadAvg().getOrElse(0.0)
+      // an unmeasurable window (−1.0) does not hold the gate
+      (math.max(0.0, exec("q01_pricing_summary")._2), load)
     }
     // Cap = 2·(our vCPUs / host cores): loadavg counts ALL host
     // runnables, so what "too much sibling load" means scales with
     // the machine — a literal 16 misfired on smaller hosts and never
     // fired on larger ones (ADVICE r12). Host cores from /proc/cpuinfo,
     // not availableProcessors() (ADVICE r13: cgroup pinning).
-    val loadCap = 2.0 * cpus.toInt / hostCores().toDouble
-    var gateAttempts = List.empty[String]
+    val loadCap = 2.0 * cpus /
+      Measure.hostCores().getOrElse(Runtime.getRuntime.availableProcessors())
+    var skipped = List.empty[(Double, Double)]
     var (gSteal, gLoad) = probe()
-    var gTries = 0
-    while ((gSteal > 1.0 || gLoad > loadCap) && gTries < 3) {
-      gateAttempts :+= s"""{"steal_pct":$gSteal,"loadavg":$gLoad}"""
+    while ((gSteal > 1.0 || gLoad > loadCap) && skipped.size < 3) {
+      skipped :+= ((gSteal, gLoad))
       System.err.println(f"[bench] contention gate: steal=$gSteal%.2f%% " +
         f"loadavg=$gLoad%.2f (cap $loadCap%.1f) — waiting 45s")
       Thread.sleep(45000)
-      gTries += 1
       val p = probe(); gSteal = p._1; gLoad = p._2
     }
-    val gateJson = s""","gate":{"fired":${gateAttempts.nonEmpty},""" +
-      s""""clean_at_start":${gSteal <= 1.0 && gLoad <= loadCap},""" +
-      s""""skipped_attempts":[${gateAttempts.mkString(",")}]}"""
 
-    val ticks0 = cpuTicks()
-    val load0 = loadAvg()
+    val ticks0 = Measure.ticks()
+    val load0 = Measure.loadAvg()
 
     // Optional args: run only the named queries (iteration aid).
     val names = if (args.nonEmpty) args.toSeq.sorted
@@ -193,58 +108,41 @@ object Bench {
           if (t2 >= 0 && t2 < t1) st2 else st1)
       }
     }
-    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
     // steal share of the machine's busy time over the measured window;
     // >2-3% means the numbers are contaminated by co-tenant VMs and a
     // slowdown vs a prior record is suspect before any code is blamed
-    val hostStats = for ((b0, s0) <- ticks0; (b1, s1) <- cpuTicks()) yield {
-      val (busy, steal) = (b1 - b0, s1 - s0)
-      val pct = if (busy + steal > 0)
-        math.round(10000.0 * steal / (busy + steal)) / 100.0 else 0.0
-      (busy, steal, pct)
-    }
-    val host = hostStats.map { case (busy, steal, pct) =>
-      val load = (for (l0 <- load0; l1 <- loadAvg()) yield
-        s""","loadavg_start":$l0,"loadavg_end":$l1,"cpus":$cpus""").getOrElse("")
-      s""","host":{"busy_ticks":$busy,"steal_ticks":$steal,"steal_pct":$pct$load$gateJson}"""
-    }.getOrElse("")
+    val window = Measure.since(ticks0)
+    val host = window.map(w => BenchRecord.Host(w,
+      for (l0 <- load0; l1 <- Measure.loadAvg()) yield (l0, l1), cpus,
+      skipped, cleanAtStart = gSteal <= 1.0 && gLoad <= loadCap))
     // Run-instability annotation (r11 ask #3): a re-measured query
     // whose two passes disagree >1.5× got hit by transient load — the
     // record names it so a cross-round delta on it is discounted by
     // the data, not by a judge's forensics.
-    val unstable = results.collect {
-      case (n, _, Some((t2, _)), _) =>
-        val t1 = firstPass.find(_._1 == n).map(_._2._1).getOrElse(-1.0)
-        (n, if (t2 > 0 && t1 > 0) math.max(t1, t2) / math.min(t1, t2) else 1.0)
-    }.filter(_._2 > 1.5).map(_._1)
-    val unstableJson =
-      if (unstable.isEmpty) ""
-      else s""","unstable":[${unstable.map("\"" + _ + "\"").mkString(",")}]"""
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$unstableJson$host}"""
+    val unstable = firstPass.zip(results).collect {
+      case ((n, (t1, _)), (_, _, Some((t2, _)), _))
+          if t1 > 0 && t2 > 0 && math.max(t1, t2) / math.min(t1, t2) > 1.5 => n
+    }
+    val line = BenchRecord.contract(
+      results.map { case (n, v, _, _) => n -> v }, sfDir, unstable, host)
+    val json = BenchRecord.mapper.writeValueAsString(line)
     // Also persist the complete per-query record in the repo: the
     // driver's captured stdout tail truncates past ~60 queries, which
     // cost round 7 a third of its cross-round comparisons. Full runs
     // only — a named-subset iteration run must not overwrite the
     // round's record with a partial one.
     if (args.isEmpty) {
-      val passes = results.map { case (n, _, rerun, _) =>
-        val (t1, st1) = firstPass.find(_._1 == n).map(_._2).getOrElse((-1.0, -1.0))
-        "\"" + n + "\":{\"first\":" + t1 + ",\"first_steal\":" + st1 +
-          rerun.map { case (t, st) =>
-            ",\"rerun\":" + t + ",\"rerun_steal\":" + st
-          }.getOrElse("") + "}"
-      }.mkString("{", ",", "}")
+      val full = line.deepCopy()
+        .put("first_pass_total", firstPass.map(_._2._1).filter(_ >= 0).sum)
+      val passes = full.putObject("passes")
       // steal stamp of each query's REPORTED pass, for clean-timing
       // harvesting across runs (VERDICT r15 ask #3b)
-      val qSteal = results.map { case (n, _, _, st) =>
-        "\"" + n + "\":" + st
-      }.mkString("{", ",", "}")
-      val firstTotal = firstPass.map(_._2._1).filter(_ >= 0).sum
-      val full = json.dropRight(1) +
-        s""","first_pass_total":$firstTotal,"passes":$passes,"query_steal":$qSteal}"""
+      val qSteal = full.putObject("query_steal")
+      firstPass.zip(results).foreach { case ((n, (t1, st1)), (_, _, rerun, st)) =>
+        val p = passes.putObject(n).put("first", t1).put("first_steal", st1)
+        rerun.foreach { case (t, rst) => p.put("rerun", t).put("rerun_steal", rst) }
+        qSteal.put(n, st)
+      }
       // a failed side write (full disk, read-only checkout) is logged,
       // never fatal: the contract line below must still print
       try {
@@ -256,32 +154,30 @@ object Bench {
         // of clobbering a cleaner committed record.
         val recFile = new java.io.File(dir, "last_run.json")
         val existing =
-          if (recFile.isFile) {
-            val src = scala.io.Source.fromFile(recFile)
-            try Some(src.mkString) finally src.close()
-          } else None
+          Option.when(recFile.isFile)(Files.readString(recFile.toPath))
         // None when /proc/stat is unavailable: an unmeasured run must
         // never overwrite a measured clean record (ADVICE r14)
-        val candSteal = hostStats.map(_._3)
+        val candSteal = window.map(_.stealPct)
         val target =
-          if (graft.bench.BenchRecord.accepts(existing, candSteal)) recFile
+          if (BenchRecord.accepts(existing, candSteal)) recFile
           else {
             val park = new java.io.File(dir, "runs")
             park.mkdirs()
             System.err.println(
-              graft.bench.BenchRecord.parkMessage(existing, candSteal))
+              BenchRecord.parkMessage(existing, candSteal))
             new java.io.File(park,
-              f"rejected_steal${candSteal.getOrElse(-1.0)}%.2f_$total%.1fs.json")
+              f"rejected_steal${candSteal.getOrElse(-1.0)}%.2f_" +
+                f"${line.get("value").asDouble}%.1fs.json")
           }
-        val pw = new java.io.PrintWriter(target)
-        try pw.println(full) finally pw.close()
+        Files.writeString(target.toPath,
+          BenchRecord.mapper.writeValueAsString(full) + "\n")
         // The exact stdout contract line, at a fixed path (VERDICT r16
         // ask #2): the driver's stdout capture keeps only a ~2000-char
         // tail — shorter than the 338-entry queries map — so its parse
         // has recovered nothing since r12. The file is the same single
         // line, machine-readable regardless of how much stdout survives.
-        val lw = new java.io.PrintWriter(new java.io.File(dir, "last_stdout.json"))
-        try lw.println(json) finally lw.close()
+        Files.writeString(
+          new java.io.File(dir, "last_stdout.json").toPath, json + "\n")
       } catch {
         case e: java.io.IOException =>
           System.err.println(s"[bench] record not persisted: $e")

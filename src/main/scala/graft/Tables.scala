@@ -21,7 +21,7 @@ object Tables {
     // Normalize events.ts to session-TZ TIMESTAMP whatever parquet
     // form the generator used. Earlier corpora wrote TIMESTAMP(NANOS),
     // which Spark only reads as a long (spark.sql.legacy.parquet
-    // .nanosAsLong, set in Verify/Bench sessions) — values are
+    // .nanosAsLong, set by GraftSession) — values are
     // µs-precision, so ns→µs is lossless. Newer corpora write
     // TIMESTAMP(MICROS, isAdjustedToUTC=false), which arrives as
     // TIMESTAMP_NTZ; the session TZ is UTC everywhere, so the NTZ→LTZ
@@ -80,23 +80,4 @@ object Tables {
   /** Register all tables as temp views for spark.sql entry points. */
   def registerAll(spark: SparkSession, dir: String): Unit =
     all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-
-  /** Session tuned for the local[32] harness but with settings that
-    * carry to a multi-executor cluster (AQE, skew handling, broadcast
-    * threshold). Shuffle partitions match local cores per the harness
-    * contract; on a real cluster this would be set to ~2-3x cores or
-    * left to AQE coalescing.
-    */
-  def session(appName: String, cpus: String): SparkSession =
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
 }

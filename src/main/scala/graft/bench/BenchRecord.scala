@@ -1,16 +1,22 @@
 package graft.bench
 
-/** Guard on the committed bench record (`bench/last_run.json`): the
-  * record may only get CLEANER. Round 13's driver run committed a
-  * 4.52%-steal run over a 1.07%-steal record because the write was
-  * unconditional — the min-steal discipline lived in the operator's
-  * head, not in code (VERDICT r13 ask #1a). The rule: a candidate run
-  * may replace the record only when its steal_pct is at or below the
-  * CLEAN BAR — max(1.0, recorded steal_pct). The 1.0 floor is the
-  * contention gate's own "clean" threshold; without it the record
-  * would ratchet monotonically toward 0% and a perfectly clean 0.9%
-  * run could never replace a 0.4% one, freezing the record forever.
-  * A candidate with NO steal measurement (cpuTicks unavailable) may
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+
+import scala.util.Try
+
+/** Bench's record: its writer, its reader, and the guard on the
+  * committed record (`bench/last_run.json`), which may only get CLEANER.
+  * Round 13's driver run committed a 4.52%-steal run over a 1.07%-steal
+  * record because the write was unconditional — the min-steal
+  * discipline lived in the operator's head, not in code (VERDICT r13
+  * ask #1a). The rule: a candidate run may replace the record only
+  * when its steal_pct is at or below the CLEAN BAR — max(1.0,
+  * recorded steal_pct). The 1.0 floor is the contention gate's own
+  * "clean" threshold; without it the record would ratchet
+  * monotonically toward 0% and a perfectly clean 0.9% run could never
+  * replace a 0.4% one, freezing the record forever.
+  * A candidate with NO steal measurement (/proc/stat unreadable) may
   * not replace a measured record either (ADVICE r14: an unmeasured
   * run is not known-clean — the inverse of the guard's intent).
   * Rejected runs are parked under `bench/runs/` so no measurement is
@@ -18,39 +24,73 @@ package graft.bench
   */
 object BenchRecord {
 
-  /** The run-level steal_pct of a last_run.json blob, anchored to the
-    * `"host":{` block (r14 ask #4: a first-match regex depended on the
-    * host block serializing before the gate block's skipped-attempt
-    * entries — a reordering would silently flip the guard's input).
-    * None when the blob has no host block or the block carries no
-    * steal_pct (non-Linux record) — treated as replaceable by
-    * [[accepts]]. */
-  def stealPctOf(json: String): Option[Double] = {
-    val at = json.indexOf("\"host\":{")
-    if (at < 0) None
-    else {
-      // Bound the search to the host object's own fields (ADVICE r15):
-      // the nested gate block's skipped_attempts carry their own
-      // steal_pct entries, so a host block that serialized WITHOUT a
-      // run-level steal_pct must read None, not the first nested one.
-      val sub = json.substring(at)
-      val end = sub.indexOf("\"gate\"") match {
-        case -1 => sub.length
-        case i  => i
-      }
-      """"steal_pct"\s*:\s*([0-9.eE+-]+)""".r
-        .findFirstMatchIn(sub.substring(0, end))
-        .flatMap(m => m.group(1).toDoubleOption)
+  /** Writes and reads the record. Content after the top-level value is
+    * a parse failure, so a record with a torn tail reads as unmeasured. */
+  val mapper: ObjectMapper =
+    new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** The host block: the measured window's counters, its start and end
+    * loadavg (when readable), the session's cores, each probe the
+    * contention gate skipped (steal %, loadavg), and whether the
+    * measured window began clean. */
+  final case class Host(window: Measure.Ticks, loadavg: Option[(Double, Double)],
+      cpus: Int, skipped: Seq[(Double, Double)], cleanAtStart: Boolean)
+
+  /** Bench's stdout contract line. Its keys, their order and the number
+    * rendering (`Double.toString`) are what record readers parse, so
+    * they stay fixed; `value` is the sum of the queries that ran (−1.0
+    * marks a failed query). */
+  def contract(queries: Seq[(String, Double)], sf: String,
+      unstable: Seq[String], host: Option[Host]): ObjectNode = {
+    val o = mapper.createObjectNode()
+      .put("metric", "total")
+      .put("value", queries.map(_._2).filter(_ >= 0).sum)
+      .put("unit", "sec")
+    val qs = o.putObject("queries")
+    queries.foreach { case (n, v) => qs.put(n, v) }
+    o.put("sf", sf)
+    if (unstable.nonEmpty) {
+      val a = o.putArray("unstable")
+      unstable.foreach(n => a.add(n))
     }
+    host.foreach { h =>
+      val hb = o.putObject("host")
+        .put("busy_ticks", h.window.busy)
+        .put("steal_ticks", h.window.steal)
+        .put("steal_pct", h.window.stealPct)
+      h.loadavg.foreach { case (l0, l1) =>
+        hb.put("loadavg_start", l0).put("loadavg_end", l1).put("cpus", h.cpus)
+      }
+      val skipped = hb.putObject("gate")
+        .put("fired", h.skipped.nonEmpty)
+        .put("clean_at_start", h.cleanAtStart)
+        .putArray("skipped_attempts")
+      h.skipped.foreach { case (steal, load) =>
+        skipped.addObject().put("steal_pct", steal).put("loadavg", load)
+      }
+    }
+    o
   }
 
-  /** The run's total seconds (`"value":N` of the top-level metric) —
-    * park-message context so a driver reading the rejection line also
-    * sees the canonical number (r14 ask #5). */
-  def totalOf(json: String): Option[Double] =
-    """"metric"\s*:\s*"total"\s*,\s*"value"\s*:\s*([0-9.eE+-]+)""".r
-      .findFirstMatchIn(json)
-      .flatMap(m => m.group(1).toDoubleOption)
+  /** The number at `path` in a record, None when the record does not
+    * parse or holds no number there. */
+  private def number(record: String, path: String*): Option[Double] =
+    Try(mapper.readTree(record)).toOption
+      .map(t => path.foldLeft(t)(_.path(_)))
+      .filter(_.isNumber)
+      .map(_.asDouble)
+
+  /** The run-level `host.steal_pct` of a last_run.json blob. The gate
+    * block's skipped attempts carry their own steal_pct entries, which
+    * never count. None when the record has no host block, the block
+    * carries no steal_pct (non-Linux record) or the record does not
+    * parse — treated as unmeasured by [[accepts]]. */
+  def stealPctOf(record: String): Option[Double] = number(record, "host", "steal_pct")
+
+  /** The run's total seconds (the top-level `value`) — park-message
+    * context so a driver reading the rejection line also sees the
+    * canonical number (r14 ask #5). */
+  def totalOf(record: String): Option[Double] = number(record, "value")
 
   /** True iff a candidate run whose measured steal is
     * `candidateStealPct` (None = no host measurement) may overwrite

@@ -1,17 +1,23 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
+import org.apache.spark.GraftBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
 
 /** Optimization-round workbench (not part of the driver contract):
-  * times named queries exactly the way Bench does (noop sink, GC
-  * settle, min-of-N) and dumps each query's `explain("formatted")` to
+  * times named queries exactly the way Bench does ([[Measure.pass]],
+  * min-of-N) and dumps each query's `explain("formatted")` to
   * plans/<tag>/<query>_<suffix>.txt so plan-shape claims in
   * OPTIMIZATION_rNN.md are reproducible. Usage:
   *
   *   sbt "runMain graft.bench.Lab <tag> <suffix> <reps> q.. q.."
   *
   * e.g. `runMain graft.bench.Lab r16 before 2 q138_stream_index_loop`.
-  * Reads SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS like Bench.
+  * With reps 0 it only writes the plans, skipping the warmup. Reads
+  * SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS like Bench.
   */
 object Lab {
   private val Usage =
@@ -30,28 +36,20 @@ object Lab {
     val reps = args(2).toInt
     val names = args.drop(3).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
     // conf A/B hook: SPARK_GRAFT_LAB_CONF="key=val;key=val"
-    sys.env.get("SPARK_GRAFT_LAB_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
+    val conf = sys.env.get("SPARK_GRAFT_LAB_CONF").toSeq
+      .flatMap(_.split(";").filter(_.nonEmpty))
+      .map { kv =>
         kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k, v)
+          case Array(k, v) => k -> v
           case _ =>
             System.err.println(
               s"[lab] malformed SPARK_GRAFT_LAB_CONF entry '$kv' — $Usage")
             sys.exit(2)
         }
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      }
+      .toMap
+    val spark = GraftSession(GraftSession.cpus, "graft-lab", conf)
 
     val unknown = names.filterNot(graft.SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
@@ -60,75 +58,54 @@ object Lab {
     dir.mkdirs()
 
     // same warmup query Bench uses, absorbing JVM/codegen startup
-    graft.SparkEntry.queries("q01_pricing_summary")(spark, sfDir)
-      .write.mode("overwrite").format("noop").save()
+    if (reps > 0) Measure.pass(spark, sfDir, "q01_pricing_summary")
 
-    def ticks(): (Long, Long) = {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try {
-        val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
-        (f(0) + f(2), if (f.length > 7) f(7) else 0L)
-      } finally src.close()
-    }
-    // job inventory (SPARK_GRAFT_LAB_JOBS=1): per-job wall time +
-    // description over the LAST pass of each query, so a multi-job
-    // query (streaming foreachBatch loops, eager checkpoints) shows
-    // WHERE its wall-clock goes — guide §1's "decide whether the time
-    // is going to shuffle read / compute / scheduler" at job grain.
-    val jobLog = if (sys.env.contains("SPARK_GRAFT_LAB_JOBS"))
-      Some(new java.util.concurrent.ConcurrentLinkedQueue[String]())
-    else None
-    jobLog.foreach { q =>
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          private val starts =
-            new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            val desc = Option(j.properties)
-              .flatMap(p => Option(p.getProperty("spark.job.description")))
-              .getOrElse("")
-            starts.put(j.jobId, (System.nanoTime(), desc)); ()
-          }
-          override def onJobEnd(
-              j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-            Option(starts.remove(j.jobId)).foreach { case (t0, desc) =>
-              val ms = (System.nanoTime() - t0) / 1e6
-              q.add(f"job ${j.jobId}%4d ${ms / 1000}%7.3fs  $desc"); ()
-            }
-        })
-    }
-    val out = names.map { n =>
-      val df = graft.SparkEntry.queries(n)(spark, sfDir)
-      val pw = new java.io.PrintWriter(new java.io.File(dir, s"${n}_$suffix.txt"))
-      try pw.println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      finally pw.close()
-      val times = (1 to reps).map { i =>
-        jobLog.foreach(_.clear())
-        System.gc()
-        val (b0, s0) = ticks()
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(n)(spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val (b1, s1) = ticks()
-        val st = if (b1 - b0 + s1 - s0 > 0)
-          100.0 * (s1 - s0) / (b1 - b0 + s1 - s0) else 0.0
-        System.err.println(f"[lab] $n pass: $dt%.2fs steal=$st%.1f%%")
-        if (i == reps) jobLog.foreach { q =>
-          import scala.jdk.CollectionConverters._
-          System.err.println(s"[lab] $n job inventory (${q.size} jobs):")
-          q.asScala.foreach(l => System.err.println(s"[lab]   $l"))
-        }
-        dt
+    // job inventory: per-job wall time + description over the LAST
+    // pass of each query, so a multi-job query (streaming foreachBatch
+    // loops, eager checkpoints) shows WHERE its wall-clock goes —
+    // guide §1's "decide whether the time is going to shuffle read /
+    // compute / scheduler" at job grain. Listener events arrive
+    // asynchronously: the bus is drained before the log is cleared or
+    // read, so no job lands in the wrong pass.
+    val jobLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      private val starts =
+        new java.util.concurrent.ConcurrentHashMap[Int, SparkListenerJobStart]()
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        starts.put(j.jobId, j); ()
       }
-      System.err.println(f"[lab] $n: ${times.map(t => f"$t%.2f").mkString(" ")}")
-      n -> times
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        Option(starts.remove(j.jobId)).foreach { s =>
+          val desc = Option(s.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .getOrElse("")
+          val secs = (j.time - s.time) / 1000.0
+          jobLog.add(f"job ${j.jobId}%4d $secs%7.3fs  $desc"); ()
+        }
+    })
+    val out = BenchRecord.mapper.createObjectNode()
+    names.foreach { n =>
+      val plan = graft.SparkEntry.queries(n)(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      Files.writeString(
+        new java.io.File(dir, s"${n}_$suffix.txt").toPath, plan + "\n")
+      val times = (1 to reps).map { _ =>
+        GraftBus.drain(spark.sparkContext)
+        jobLog.clear()
+        val (seconds, steal) = Measure.pass(spark, sfDir, n)
+        val st = steal.fold("?")(p => f"$p%.1f")
+        System.err.println(f"[lab] $n pass: $seconds%.2fs steal=$st%%")
+        seconds
+      }
+      if (reps > 0) {
+        GraftBus.drain(spark.sparkContext)
+        System.err.println(s"[lab] $n job inventory (${jobLog.size} jobs):")
+        jobLog.asScala.foreach(l => System.err.println(s"[lab]   $l"))
+      }
+      val a = out.putArray(n)
+      times.foreach(t => a.add(math.round(t * 1000) / 1000.0))
     }
-    println("{" + out.map { case (n, ts) =>
-      "\"" + n + "\":[" + ts.map(t => f"$t%.3f").mkString(",") + "]"
-    }.mkString(",") + "}")
+    println(BenchRecord.mapper.writeValueAsString(out))
     spark.stop()
   }
 }

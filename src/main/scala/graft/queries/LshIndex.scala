@@ -82,7 +82,7 @@ object LshIndex {
     // (scoped persist, released before return), and run the two
     // independent writes concurrently (guide §2.6, same as appends)
     val sh = Sketches.shingled(corpus).persist()
-    try bothTables(
+    try bothTables(s.sparkContext,
       () => graft.Tables.bucketize(
         postingsFromShingled(sh).withColumn("batch_id", lit(-1L)),
         s"${name}_postings", buckets, "band", "h1", "h2"),
@@ -157,17 +157,36 @@ object LshIndex {
     * and launched from one driver thread they serialize, leaving the
     * cluster idle in each job's tail (guide §2.6). The per-table
     * replay gates already heal ANY crash interleaving — parallelism
-    * adds no new window. Finite patience so a wedged write fails the
-    * caller loudly instead of hanging the ingest loop. */
-  private def bothTables(left: () => Unit, right: () => Unit): Unit = {
+    * adds no new window. Each write runs in its own job group with
+    * finite patience: a wedged write cancels both groups and fails the
+    * caller loudly (ADVICE r17 #1). Both writes are awaited; a second
+    * failure is suppressed on the first. */
+  private[queries] def bothTables(sc: org.apache.spark.SparkContext,
+      left: () => Unit, right: () => Unit): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     implicit val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val (fa, fb) =
-      (scala.concurrent.Future(left()), scala.concurrent.Future(right()))
+    val tag = java.util.UUID.randomUUID()
+    val writes = Seq("postings" -> left, "grams" -> right).map { case (t, w) =>
+      val grp = s"lsh_index_${t}_$tag"
+      grp -> scala.concurrent.Future {
+        sc.setJobGroup(grp, s"LSH index $t write")
+        w()
+      }
+    }
     val patience = scala.concurrent.duration.Duration(10, "min")
     try {
-      scala.concurrent.Await.result(fa, patience)
-      scala.concurrent.Await.result(fb, patience)
+      val failures = writes.flatMap { case (_, f) =>
+        try {
+          scala.concurrent.Await.ready(f, patience)
+          f.value.flatMap(_.failed.toOption)
+        } catch { case e: java.util.concurrent.TimeoutException =>
+          writes.foreach { case (g, _) => sc.cancelJobGroup(g) }
+          Some(e)
+        }
+      }
+      failures.reduceOption { (first, second) =>
+        first.addSuppressed(second); first
+      }.foreach(e => throw e)
     } finally { pool.shutdown(); () }
   }
 
@@ -182,7 +201,7 @@ object LshIndex {
   private[queries] def appendPrepared(post: DataFrame, sh: DataFrame,
       name: String, buckets: Int = 8, batchId: Long = -1L): Unit = {
     val s = post.sparkSession
-    bothTables(
+    bothTables(s.sparkContext,
       () => if (shouldAppend(s, s"${name}_postings", batchId)) {
         post.withColumn("batch_id", lit(batchId))
           .repartition(buckets, col("band"), col("h1"), col("h2"))

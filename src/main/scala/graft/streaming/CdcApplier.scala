@@ -40,8 +40,9 @@ object CdcApplier {
     * THIS row was captured (from the table's Relation message riding
     * the same envelope) — carried per change, not per table, so a
     * replident change mid-batch (DDL) resolves each row with the keys
-    * of its own capture point, not the batch's newest. `None` = the
-    * wire didn't say (pglogical); the apply-side resolver decides. */
+    * of its own capture point, not the batch's newest. `format("pgcapture")`
+    * rows always carry a list (empty for pglogical, whose relations ship
+    * no key flags); `None` leaves the keys to the apply-side resolver. */
   final case class Change(op: String, schema: String, table: String,
       newFields: Map[String, Array[Byte]], oldFields: Map[String, Array[Byte]],
       oids: Map[String, Int], lsn: Long, seq: Int,

@@ -17,45 +17,19 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object CdcPipeline {
 
-  /** Collect one micro-batch into applier changes, ordered. The sort
-    * and collect run on the executor/driver boundary — the ordered
+  /** Collect one micro-batch into applier changes, in arrival order
+    * (each consumer filters and sorts its own slice by (lsn, seq)).
+    * The collect runs on the executor/driver boundary — the ordered
     * apply is inherently single-writer (A22); upstream decode and
-    * routing stay distributed. */
-  def toChanges(batch: DataFrame): Seq[CdcApplier.Change] =
-    changesOf(collectRows(batch))
-
-  /** Collect one micro-batch EXACTLY ONCE: the ordered changes plus a
-    * key resolver read off the same rows — the envelope's `keys`
-    * column carries the replica-identity columns from each table's
-    * Relation message, so the apply leg needs no out-of-band catalog
-    * (SURVEY A6 — pgoutput ships the key flags on the wire; pglogical
-    * does not, so there an explicit resolver is still required). A
-    * second action would re-read and re-decode the offset range's
-    * segments; everything derives from the single collect.
-    *
-    * Each Change also carries its OWN row's keys ([[CdcApplier.Change.keys]],
-    * which the applier prefers over any resolver): if replica identity
-    * changes mid-batch, rows captured before the DDL keep the keys that
-    * rode their envelope rows. The returned resolver (last-row-wins per
-    * table) is only the fallback for rows whose envelope had none. */
-  def collectBatch(batch: DataFrame): (Seq[CdcApplier.Change], CdcApplier.KeyResolver) = {
-    val rows = collectRows(batch)
-    val km = rows.iterator.map { r =>
-      (r.getString(1), r.getString(2)) ->
-        (if (r.isNullAt(8)) Seq.empty[String] else r.getSeq[String](8))
-    }.toMap
-    (changesOf(rows), (s: String, t: String) => km.getOrElse((s, t), Seq.empty))
-  }
-
-  private def collectRows(batch: DataFrame): Array[Row] = batch
-    .select("op", "schema", "table", "new", "old", "oids", "lsn", "seq", "keys")
-    .collect()
-
-  private def changesOf(rows: Array[Row]): Seq[CdcApplier.Change] = {
+    * routing stay distributed. One action only: a second would re-read
+    * and re-decode the offset range's segments. */
+  def toChanges(batch: DataFrame): Seq[CdcApplier.Change] = {
     def m(r: Row, i: Int): Map[String, Array[Byte]] =
       if (r.isNullAt(i)) Map.empty
       else r.getMap[String, Array[Byte]](i).toMap
-    rows
+    batch
+      .select("op", "schema", "table", "new", "old", "oids", "lsn", "seq", "keys")
+      .collect()
       .map { r =>
         CdcApplier.Change(r.getString(0), r.getString(1), r.getString(2),
           m(r, 3), m(r, 4),
@@ -63,21 +37,21 @@ object CdcPipeline {
           r.getLong(6), r.getInt(7),
           keys = if (r.isNullAt(8)) None else Some(r.getSeq[String](8).toList))
       }
-      .sortBy(c => (c.lsn ^ Long.MinValue, c.seq))
       .toSeq
   }
 
   /** Start the capture→apply pipeline over a WAL feed directory.
     *
-    * `keys` defaults to null = self-describing: resolve key columns
-    * from the stream's own `keys` envelope column per batch. The
-    * stream carries an `observe()` block (changes, max lsn, latest
-    * commit_ts) so every StreamingQueryProgress event reports apply
-    * metrics — attach a [[GraftMetricsListener]] via
+    * Self-describing: every row's envelope carries the replica-identity
+    * columns in force when it was captured (the `keys` column, from the
+    * table's Relation message — SURVEY A6), so the apply leg needs no
+    * out-of-band catalog. The stream carries an `observe()` block
+    * (changes, max lsn, latest commit_ts) so every StreamingQueryProgress
+    * event reports apply metrics — attach a [[GraftMetricsListener]] via
     * `spark.streams.addListener` for the A38 lag gauge. */
   def start(spark: SparkSession, walDir: String, checkpointDir: String,
       store: CdcApplier.TxStore, sourceId: String,
-      keys: CdcApplier.KeyResolver = null, tablesRegex: Option[String] = None,
+      tablesRegex: Option[String] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val reader = spark.readStream.format("pgcapture").option("path", walDir)
     tablesRegex.foreach(r => reader.option("tables", r))
@@ -90,9 +64,7 @@ object CdcPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (changes, derived) = collectBatch(batch)
-        CdcApplier.applyBatch(store, sourceId, changes,
-          if (keys != null) keys else derived)
+        CdcApplier.applyBatch(store, sourceId, toChanges(batch), (_, _) => Nil)
         ()
       }
       .start()

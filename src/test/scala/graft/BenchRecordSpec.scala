@@ -95,6 +95,50 @@ class BenchRecordSpec extends AnyFunSuite {
     assert(unmeasured.contains("no steal measurement"))
   }
 
+  test("the contract writer renders the same bytes as the string-built line") {
+    import BenchRecord.Host
+    import graft.bench.Measure.Ticks
+    def line(queries: Seq[(String, Double)], unstable: Seq[String],
+        host: Option[Host]) = BenchRecord.mapper.writeValueAsString(
+      BenchRecord.contract(queries, "/root/testdata/sf0.1", unstable, host))
+    // each literal is what the string-concatenating writer printed
+    assert(line(
+      Seq("q01_pricing_summary" -> 0.720005048, "q02_filter_project" -> -1.0,
+        "q138_stream_index_loop" -> 6.43125),
+      Seq("q138_stream_index_loop"),
+      Some(Host(Ticks(452482, 21438), Some((1.89, 6.01)), 32,
+        Seq((1.37, 4.19)), cleanAtStart = true))) ==
+      """{"metric":"total","value":7.151255048,"unit":"sec","queries":""" +
+      """{"q01_pricing_summary":0.720005048,"q02_filter_project":-1.0,""" +
+      """"q138_stream_index_loop":6.43125},"sf":"/root/testdata/sf0.1",""" +
+      """"unstable":["q138_stream_index_loop"],"host":{"busy_ticks":452482,""" +
+      """"steal_ticks":21438,"steal_pct":4.52,"loadavg_start":1.89,""" +
+      """"loadavg_end":6.01,"cpus":32,"gate":{"fired":true,""" +
+      """"clean_at_start":true,"skipped_attempts":""" +
+      """[{"steal_pct":1.37,"loadavg":4.19}]}}}""")
+    // no loadavg, no skipped attempt, nothing unstable
+    assert(line(Seq("q01_pricing_summary" -> 0.5), Nil,
+      Some(Host(Ticks(10, 0), None, 4, Nil, cleanAtStart = true))) ==
+      """{"metric":"total","value":0.5,"unit":"sec","queries":""" +
+      """{"q01_pricing_summary":0.5},"sf":"/root/testdata/sf0.1",""" +
+      """"host":{"busy_ticks":10,"steal_ticks":0,"steal_pct":0.0,""" +
+      """"gate":{"fired":false,"clean_at_start":true,"skipped_attempts":[]}}}""")
+  }
+
+  test("a truncated or unparsable record reads as unmeasured") {
+    val whole = rec(1.07)
+    for (bad <- Seq(whole.dropRight(3), whole.take(whole.indexOf("\"gate\"")),
+        whole + "}", "not json", "")) {
+      assert(BenchRecord.stealPctOf(bad).isEmpty, bad)
+      assert(BenchRecord.totalOf(bad).isEmpty, bad)
+      // unmeasured: a clean candidate replaces it, a dirty one parks
+      assert(BenchRecord.accepts(Some(bad), Some(0.9)), bad)
+      assert(!BenchRecord.accepts(Some(bad), Some(4.52)), bad)
+    }
+    assert(BenchRecord.parkMessage(Some(whole.dropRight(3)), Some(4.52))
+      .contains("record kept: ? @ ? steal"))
+  }
+
   test("the committed record parses") {
     val f = new java.io.File("bench/last_run.json")
     assume(f.isFile)

@@ -3,22 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (Spark startup dominates
-  * test wall-clock otherwise). */
+  * test wall-clock otherwise): the harness session, so tests run under
+  * Verify's and Bench's semantics (the r6 q79 escape), on a fixed four
+  * cores whatever `SPARK_GRAFT_CPUS` says. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Pinned, not inherited: the driver's Verify/Bench harness runs
-      // under ANSI semantics, and a Spark-default drift here would let
-      // tests pass queries the harness rejects (the r6 q79 escape).
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(4, "graft-test")
 }

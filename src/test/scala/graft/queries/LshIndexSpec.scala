@@ -319,4 +319,18 @@ class LshIndexSpec extends AnyFunSuite {
       spark.sql(s"drop table if exists ${name}_grams__c")
     }
   }
+
+  test("the two table writes run in their own job groups and surface both failures") {
+    def write(table: String, fail: Exception): () => Unit = () => {
+      val group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+      assert(group.startsWith(s"lsh_index_${table}_"), group)
+      throw fail
+    }
+    val e = intercept[IllegalStateException](LshIndex.bothTables(
+      spark.sparkContext,
+      write("postings", new IllegalStateException("postings")),
+      write("grams", new IllegalArgumentException("grams"))))
+    assert(e.getMessage == "postings")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("grams"))
+  }
 }

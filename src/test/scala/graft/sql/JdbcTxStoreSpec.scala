@@ -72,12 +72,10 @@ class JdbcTxStoreSpec extends TxStoreContract {
       "id" bigint not null primary key, "bal" integer)""")
     conn.commit()
     val store = new JdbcTxStore(conn)
-    val registry = new graft.cdc.SchemaRegistry
-    registry.update(rel)
     val spark = graft.SparkTestSession.spark
     val q = graft.streaming.CdcPipeline.start(spark, walDir,
       java.nio.file.Files.createTempDirectory("jck").toString,
-      store, "acct", registry.keyColumns(_, _))
+      store, "acct")
     q.awaitTermination(60000)
     val rs = st.executeQuery("""select "id", "bal" from "public"."accounts" order by "id"""")
     val rows = Iterator.continually(rs)

@@ -102,8 +102,6 @@ class PipelineSpec extends AnyFunSuite {
     val ckDir = Files.createTempDirectory("pmetck").toString
     val spark = SparkTestSession.spark
     val store = new InMemoryTxStore
-    val registry = new SchemaRegistry
-    registry.update(rel)
     graft.sources.WalFiles.writeSegment(walDir, 20L,
       PgOutput.Encoder.relation(rel) +:
         (tx(20L, ins(1, 100), ins(2, 200)) ++ tx(21L, upd(2, 250))))
@@ -111,8 +109,7 @@ class PipelineSpec extends AnyFunSuite {
     val listener = new GraftMetricsListener
     spark.streams.addListener(listener)
     try {
-      val q = CdcPipeline.start(spark, walDir, ckDir, store, "met",
-        registry.keyColumns(_, _))
+      val q = CdcPipeline.start(spark, walDir, ckDir, store, "met")
       q.awaitTermination(60000)
       // listener events are delivered asynchronously — poll briefly
       val deadline = System.currentTimeMillis() + 30000
