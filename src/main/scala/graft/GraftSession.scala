@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.NioCheckpointFileManager
 import org.apache.spark.sql.SparkSession
 
 /** The one Spark session every main and the test suites run on, so
@@ -13,7 +14,8 @@ object GraftSession {
 
   /** A `local[cpus]` session with one shuffle partition per core, UTC,
     * nanosecond parquet timestamps read as longs ([[Tables.load]]
-    * converts them), AQE and ANSI on, and no UI. `conf` is set after
+    * converts them), AQE and ANSI on, no UI, and stream checkpoints
+    * written through [[NioCheckpointFileManager]]. `conf` is set after
     * these, so it overrides them. */
   def apply(cpus: Int, appName: String,
       conf: Map[String, String] = Map.empty): SparkSession = {
@@ -26,6 +28,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.ansi.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(NioCheckpointFileManager.Key, NioCheckpointFileManager.ClassName)
       .config(conf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -256,9 +256,12 @@ final class PgWalPartitionReader(p: PgWalPartition)
 
   private val tally = new WalFiles.SkipTally
 
+  // replay order is checkpoint order: stop at the batch end instead of
+  // decoding the rest of the feed
   private val it = WalFiles.replay(liveSegs, decoder, tally = tally,
-      tallyFrom = p.start)
-    .filter(e => e.cp.after(p.start) && !e.cp.after(p.end))
+      tallyFrom = p.start, tallyTo = p.end)
+    .filter(_.cp.after(p.start))
+    .takeWhile(!_.cp.after(p.end))
     .filter(e => pattern.forall(_.matcher(e.change.rel.name).matches()))
 
   private var current: WalFiles.WalEvent = _

@@ -125,16 +125,19 @@ object WalFiles {
     * relation, each taking a seq slot (so checkpoints stay dense and
     * WalTail/planBatch agree on offsets).
     *
-    * `tallyFrom` windows the unknown-frame count: a reader resuming
-    * mid-segment replays already-delivered frames, and counting those
-    * again every micro-batch overstates the gauge (ADVICE r14) — only
-    * frames whose transaction still has undelivered rows past
-    * `tallyFrom` count. */
+    * `tallyFrom` and `tallyTo` window the unknown-frame count to the
+    * batch: a reader resuming mid-segment replays already-delivered
+    * frames, and one reading up to its batch end decodes the frames
+    * just past it, so counting either again every micro-batch overstates
+    * the gauge (ADVICE r14) — only frames whose would-be checkpoint lies
+    * after `tallyFrom` and at or before `tallyTo` count. */
   def replay(segs: Seq[Path],
       decoder: PgOutput.WireDecoder = new PgOutput.Decoder,
       startLsn: Long = 0L, startSeq: Int = 0,
       startCommitUs: Long = 0L, tally: SkipTally = null,
-      tallyFrom: Checkpoint = Checkpoint.Zero): Iterator[WalEvent] = {
+      tallyFrom: Checkpoint = Checkpoint.Zero,
+      // the largest checkpoint: lsn compares unsigned
+      tallyTo: Checkpoint = Checkpoint(-1L, Int.MaxValue)): Iterator[WalEvent] = {
     var lsn = startLsn
     var seq = startSeq
     var commitUs = startCommitUs
@@ -175,8 +178,10 @@ object WalFiles {
           // skip + advance, never throw, zero rows (r13 ask #4) — and
           // counted only inside the batch window: the frame sits at
           // would-be checkpoint (lsn, seq+1), so a tx fully delivered
-          // before `tallyFrom` never recounts on replay
-          if (Checkpoint(lsn, seq + 1).after(tallyFrom)) {
+          // before `tallyFrom` never recounts on replay, and a frame past
+          // `tallyTo` waits for the batch that delivers its position
+          val at = Checkpoint(lsn, seq + 1)
+          if (at.after(tallyFrom) && !at.after(tallyTo)) {
             unknownFrames.incrementAndGet()
             if (tally != null) tally.unknowns += 1
           }

@@ -48,11 +48,18 @@ object CdcPipeline {
     * out-of-band catalog. The stream carries an `observe()` block
     * (changes, max lsn, latest commit_ts) so every StreamingQueryProgress
     * event reports apply metrics — attach a [[GraftMetricsListener]] via
-    * `spark.streams.addListener` for the A38 lag gauge. */
+    * `spark.streams.addListener` for the A38 lag gauge.
+    *
+    * When `spark`'s conf leaves Spark's checkpoint-manager setting
+    * ([[NioCheckpointFileManager.Key]]) unset, this sets it on that
+    * session to [[NioCheckpointFileManager]], so the stream's offset and
+    * commit logs are written without forking processes; an explicit
+    * choice of the caller stays. [[startBusLeg]] does the same. */
   def start(spark: SparkSession, walDir: String, checkpointDir: String,
       store: CdcApplier.TxStore, sourceId: String,
       tablesRegex: Option[String] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    useNioCheckpoints(spark)
     val reader = spark.readStream.format("pgcapture").option("path", walDir)
     tablesRegex.foreach(r => reader.option("tables", r))
     reader.load()
@@ -70,6 +77,10 @@ object CdcPipeline {
       .start()
   }
 
+  private def useNioCheckpoints(spark: SparkSession): Unit =
+    if (spark.conf.getOption(NioCheckpointFileManager.Key).isEmpty)
+      spark.conf.set(NioCheckpointFileManager.Key, NioCheckpointFileManager.ClassName)
+
   /** The capture→bus leg (the reference's pg2pulsar, cmd/pg2pulsar.go):
     * WAL feed → bus producer, idempotent via the producer's cached
     * watermark (A11-A13). Against a real broker this leg is
@@ -79,6 +90,7 @@ object CdcPipeline {
   def startBusLeg(spark: SparkSession, walDir: String, checkpointDir: String,
       busDir: String, tablesRegex: Option[String] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    useNioCheckpoints(spark)
     val reader = spark.readStream.format("pgcapture").option("path", walDir)
     tablesRegex.foreach(r => reader.option("tables", r))
     reader.load()

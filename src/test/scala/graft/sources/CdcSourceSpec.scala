@@ -34,10 +34,12 @@ class CdcSourceSpec extends AnyFunSuite {
     PgOutput.Encoder.delete(rel, Seq(PgType.encode(PgType.Int8, id), null))
 
   private def runStream(walDir: String, ckDir: String,
-      tables: Option[String] = None): Seq[(String, String, Long, Long, Int)] = {
+      tables: Option[String] = None,
+      options: Map[String, String] = Map.empty): Seq[(String, String, Long, Long, Int)] = {
     val spark = SparkTestSession.spark
     val out = scala.collection.mutable.Buffer.empty[(String, String, Long, Long, Int)]
     val reader = spark.readStream.format("pgcapture").option("path", walDir)
+      .options(options)
     tables.foreach(reader.option("tables", _))
     val q = reader.load()
       .writeStream
@@ -155,6 +157,22 @@ class CdcSourceSpec extends AnyFunSuite {
     val l = new graft.streaming.GraftMetricsListener()
     assert(l.truncateEventsDelivered == WalFiles.truncateFrames.get())
     assert(l.unknownFramesSkipped == WalFiles.unknownFrames.get())
+  }
+
+  test("a batch counts the unknown frames inside its window only, once") {
+    // one transaction per micro-batch: the reader of batch 1 (tx 100)
+    // stops at its end, and the origin frame just past that end, at
+    // would-be checkpoint (100, 2), belongs to batch 2 alone
+    val walDir = Files.createTempDirectory("walUw").toString
+    WalFiles.writeSegment(walDir, 100L, PgOutput.Encoder.relation(rel) +: (
+      tx(100L, ins(rel, 1, 10)) ++
+        (PgOutput.Encoder.origin(55L, "src_a") +: tx(101L, ins(rel, 2, 20)))))
+    val u0 = WalFiles.unknownFrames.get()
+    val got = runStream(walDir, Files.createTempDirectory("ckUw").toString,
+      options = Map("maxChangesPerBatch" -> "1"))
+    assert(got.map(e => (e._1, e._3, e._4)) ==
+      Seq(("INSERT", 1L, 100L), ("INSERT", 2L, 101L)))
+    assert(WalFiles.unknownFrames.get() - u0 == 1, "one origin frame, counted once")
   }
 
   test("logical messages are first-class control rows with dense checkpoints (r15)") {
