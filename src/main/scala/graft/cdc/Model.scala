@@ -79,6 +79,8 @@ final case class Checkpoint(lsn: Long, seq: Int) extends Ordered[Checkpoint] {
 
 object Checkpoint {
   val Zero: Checkpoint = Checkpoint(0L, 0)
+  /** The largest checkpoint (lsn compares unsigned). */
+  val Max: Checkpoint = Checkpoint(-1L, Int.MaxValue)
   def parse(s: String): Checkpoint = {
     val i = s.indexOf('|')
     require(i > 0, s"malformed checkpoint '$s'")

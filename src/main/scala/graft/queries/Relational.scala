@@ -33,8 +33,8 @@ object Relational {
       """SELECT l_returnflag, l_linestatus,
         |  round(sum(l_quantity), 2) AS sum_qty,
         |  round(sum(l_extendedprice), 2) AS sum_base_price,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        |  round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
+        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_disc_price,
+        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_charge,
         |  round(avg(l_quantity), 4) AS avg_qty,
         |  round(avg(l_extendedprice), 4) AS avg_price,
         |  round(avg(l_discount), 4) AS avg_disc,
@@ -49,8 +49,13 @@ object Relational {
         .agg(
           round(sum(col("l_quantity")), 2).as("sum_qty"),
           round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax"))), 2).as("sum_charge"),
+          // Sum in decimal, as q02 rounds: each product is exact at 4
+          // (6 with the tax) decimals, so the casts recover it on both
+          // engines and a half-cent tie in the sum rounds the same way.
+          round(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
+            .cast("decimal(18,4)")), 2).cast("double").as("sum_disc_price"),
+          round(sum((col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax")))
+            .cast("decimal(18,6)")), 2).cast("double").as("sum_charge"),
           round(avg(col("l_quantity")), 4).as("avg_qty"),
           round(avg(col("l_extendedprice")), 4).as("avg_price"),
           round(avg(col("l_discount")), 4).as("avg_disc"),
@@ -85,7 +90,7 @@ object Relational {
     // ---- 3-way join + agg + top-k (shuffle join on fact keys) ----
     QueryDef.sql("q03_top_revenue_orders",
       """SELECT o_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
         |FROM customer JOIN orders ON c_custkey = o_custkey
         |  JOIN lineitem ON l_orderkey = o_orderkey
         |WHERE c_mktsegment = 'BUILDING'
@@ -98,7 +103,10 @@ object Relational {
       c.join(o, col("c_custkey") === col("o_custkey"))
         .join(l, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderkey"), col("o_orderdate"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
+        // summed in decimal like q01 (a double sum can land either side
+        // of a half-cent tie: 810977.70 here against DuckDB's .71)
+        .agg(round(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
+          .cast("decimal(18,4)")), 2).cast("double").as("revenue"))
         .orderBy(col("revenue").desc, col("o_orderkey"))
         .limit(10)
     },

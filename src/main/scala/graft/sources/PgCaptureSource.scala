@@ -2,8 +2,10 @@ package graft.sources
 
 import java.util
 
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import graft.cdc.Checkpoint
-import graft.codec.PgOutput
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
@@ -110,19 +112,21 @@ final class PgCaptureTable(path: String, tablesRegex: Option[String],
         // driver's tag-level scan, decoding only its own bytes. The
         // ordered single-partition layout is a STREAM-side constraint
         // (the applier's total order); analytics over the feed have no
-        // such constraint and get full cluster fan-out.
+        // such constraint and get full cluster fan-out. `startLsn`
+        // prunes by the stream's rule: planning starts at the segment
+        // that holds the first row after it.
         override def toBatch: org.apache.spark.sql.connector.read.Batch = {
           new org.apache.spark.sql.connector.read.Batch {
-            override def planInputPartitions(): Array[InputPartition] =
-              WalFiles.planBatch(path, plugin)
-                .map(sp => PgWalBatchPartition(sp, tablesRegex, startLsn,
-                  plugin): InputPartition)
+            override def planInputPartitions(): Array[InputPartition] = {
+              val from = startLsn.map(Checkpoint(_, 0)).getOrElse(Checkpoint.Zero)
+              val plans = WalFiles.planBatch(path, plugin)
+              plans.drop(WalFiles.startIndex(plans, from))
+                .map(sp => PgWalPartition(sp, Nil, from, Checkpoint.Max,
+                  tablesRegex, plugin): InputPartition)
                 .toArray
+            }
             override def createReaderFactory(): PartitionReaderFactory =
-              new PartitionReaderFactory {
-                override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-                  new PgWalBatchReader(p.asInstanceOf[PgWalBatchPartition])
-              }
+              PgWalReaderFactory
           }
         }
       }
@@ -135,12 +139,18 @@ final case class PgOffset(lsn: Long, seq: Int) extends Offset {
   def cp: Checkpoint = Checkpoint(lsn, seq)
 }
 object PgOffset {
+  private val mapper =
+    new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
   def apply(cp: Checkpoint): PgOffset = PgOffset(cp.lsn, cp.seq)
+  /** Read [[PgOffset.json]]'s form back: an object of exactly the two
+    * integer fields; anything else, trailing content included, throws. */
   def parse(json: String): PgOffset = {
-    val m = """\{"lsn":(-?\d+),"seq":(-?\d+)\}""".r
-    json match {
-      case m(l, s) => PgOffset(l.toLong, s.toInt)
-      case other => throw new IllegalArgumentException(s"bad offset: $other")
+    val t = Try(mapper.readTree(json)).toOption.filter(_.size == 2)
+    def field(n: String) = t.map(_.path(n)).filter(_.isIntegralNumber)
+    (field("lsn").filter(_.canConvertToLong),
+        field("seq").filter(_.canConvertToInt)) match {
+      case (Some(l), Some(s)) => PgOffset(l.longValue, s.intValue)
+      case _ => throw new IllegalArgumentException(s"bad offset: $json")
     }
   }
 }
@@ -203,65 +213,64 @@ final class PgCaptureMicroBatchStream(dir: String, tablesRegex: Option[String],
   override def deserializeOffset(json: String): Offset = PgOffset.parse(json)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[PgOffset]
-    val e = end.asInstanceOf[PgOffset]
+    val s = start.asInstanceOf[PgOffset].cp
+    val e = end.asInstanceOf[PgOffset].cp
     if (s == e) Array.empty // keepalive: no new WAL → empty batch (A9)
-    else Array(PgWalPartition(dir, s.cp, e.cp, tablesRegex, plugin))
+    else {
+      val (plan, following) = tail.span(s, e)
+      Array(PgWalPartition(plan, following, s, e, tablesRegex, plugin))
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new PgWalPartitionReader(p.asInstanceOf[PgWalPartition])
-    }
+    PgWalReaderFactory
 
   /** Standby-status feedback: ack up to the committed checkpoint so the
-    * WAL producer may truncate (reference pkg/source/postgres.go:250-275). */
-  override def commit(end: Offset): Unit =
-    WalFiles.writeAck(dir, end.asInstanceOf[PgOffset].cp)
+    * WAL producer may truncate (reference pkg/source/postgres.go:250-275),
+    * and drop the tail's plans behind it. */
+  override def commit(end: Offset): Unit = {
+    val cp = end.asInstanceOf[PgOffset].cp
+    WalFiles.writeAck(dir, cp)
+    tail.commit(cp)
+  }
 
   override def stop(): Unit = ()
 }
 
-final case class PgWalPartition(dir: String, start: Checkpoint,
-    end: Checkpoint, tablesRegex: Option[String],
-    plugin: String = "pgoutput") extends InputPartition
+/** The rows in (from, to] of a replay that starts at `plan` and runs
+  * on through the segments at `following`, in order. The stream plans
+  * one per batch; the batch scan one per segment, with `to` the largest
+  * checkpoint. */
+final case class PgWalPartition(plan: WalFiles.SegPlan,
+    following: Seq[String], from: Checkpoint, to: Checkpoint,
+    tablesRegex: Option[String], plugin: String) extends InputPartition
 
+private[sources] object PgWalReaderFactory extends PartitionReaderFactory {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new PgWalPartitionReader(p.asInstanceOf[PgWalPartition])
+}
+
+/** Replays its partition's segments from the plan's state: the relation
+  * catalog and (lsn, seq) come with the partition, so it reads those
+  * segment files and nothing else of the feed. */
 final class PgWalPartitionReader(p: PgWalPartition)
     extends PartitionReader[InternalRow] {
 
   private val pattern = p.tablesRegex.map(_.r.pattern)
 
-  // Segment pruning: drop every segment strictly below the one that
-  // contains the start checkpoint (PG WAL restart_lsn semantics); the
-  // replay gate below drops already-delivered messages inside it.
-  // Pruned segments may still hold the only Relation declarations for
-  // rows decoded later, so they are replayed in state-only mode first
-  // ('R' frames feed the decoder, nothing is emitted).
-  private val (prunedSegs, liveSegs) = {
-    val all = WalFiles.segments(p.dir)
-    val keepFrom = all.lastIndexWhere { case (first, _) =>
-      java.lang.Long.compareUnsigned(first, p.start.lsn) <= 0
-    }
-    // the containing segment must be replayed from its first frame so
-    // the replay gate (not the decoder) drops delivered rows
-    if (keepFrom <= 0) (Seq.empty[java.nio.file.Path], all.map(_._2))
-    else (all.take(keepFrom).map(_._2), all.drop(keepFrom).map(_._2))
-  }
-
   private val decoder = WalFiles.decoderFor(p.plugin)
-  // truncated history first (sidecar catalog), then pruned segments
-  WalFiles.warmCatalog(p.dir, decoder)
-  WalFiles.warmRelations(prunedSegs, decoder)
+  p.plan.relations.foreach(decoder.decode)
 
   private val tally = new WalFiles.SkipTally
 
   // replay order is checkpoint order: stop at the batch end instead of
   // decoding the rest of the feed
-  private val it = WalFiles.replay(liveSegs, decoder, tally = tally,
-      tallyFrom = p.start, tallyTo = p.end)
-    .filter(_.cp.after(p.start))
-    .takeWhile(!_.cp.after(p.end))
+  private val it = WalFiles.replay(
+      (p.plan.path +: p.following).map(java.nio.file.Paths.get(_)), decoder,
+      p.plan.startLsn, p.plan.startSeq, p.plan.startCommitUs, tally,
+      tallyFrom = p.from, tallyTo = p.to)
+    .filter(_.cp.after(p.from))
+    .takeWhile(!_.cp.after(p.to))
     .filter(e => pattern.forall(_.matcher(e.change.rel.name).matches()))
 
   private var current: WalFiles.WalEvent = _
@@ -316,8 +325,7 @@ private[sources] object PgScanMetrics {
     })
 }
 
-/** Envelope row construction shared by the streaming and batch
-  * readers. */
+/** Envelope row construction of the reader. */
 private[sources] object PgWalRows {
   def toRow(e: WalFiles.WalEvent): InternalRow = {
     val ch = e.change
@@ -344,49 +352,4 @@ private[sources] object PgWalRows {
       new GenericArrayData(rel.columns.filter(_.isKey)
         .map(c => UTF8String.fromString(c.name): Any).toArray)))
   }
-}
-
-/** One segment of the feed, decoded in isolation: boundary replay
-  * state and the relation catalog as of the segment start came from
-  * the driver's plan (see [[WalFiles.planBatch]]). */
-final case class PgWalBatchPartition(plan: WalFiles.SegPlan,
-    tablesRegex: Option[String], startLsn: Option[Long],
-    plugin: String = "pgoutput") extends InputPartition
-
-final class PgWalBatchReader(p: PgWalBatchPartition)
-    extends PartitionReader[InternalRow] {
-
-  private val pattern = p.tablesRegex.map(_.r.pattern)
-  private val startCp = p.startLsn.map(Checkpoint(_, 0))
-
-  private val decoder = WalFiles.decoderFor(p.plugin)
-  p.plan.relFrames.foreach(decoder.decode)
-
-  private val tally = new WalFiles.SkipTally
-
-  private val it = WalFiles.replay(
-    Seq(java.nio.file.Paths.get(p.plan.path)), decoder,
-    p.plan.startLsn, p.plan.startSeq, p.plan.startCommitUs, tally,
-    tallyFrom = startCp.getOrElse(Checkpoint.Zero))
-    .filter(e => startCp.forall(c => e.cp.after(c)))
-    .filter(e => pattern.forall(_.matcher(e.change.rel.name).matches()))
-
-  private var current: WalFiles.WalEvent = _
-
-  override def next(): Boolean =
-    if (it.hasNext) {
-      current = it.next()
-      if (current.change.op == "TRUNCATE") { // delivered, post-filter
-        tally.truncates += 1
-        WalFiles.truncateFrames.incrementAndGet()
-      }
-      true
-    } else false
-
-  override def get(): InternalRow = PgWalRows.toRow(current)
-
-  override def currentMetricsValues(): Array[CustomTaskMetric] =
-    PgScanMetrics.values(tally)
-
-  override def close(): Unit = ()
 }

@@ -12,10 +12,10 @@ import graft.codec.{BytesReader, BytesWriter, PgOutput, PgType}
   * works the same way a replication client's restart_lsn does: each
   * segment file `wal-<16-hex-lsn>.seg` is named by the LSN of its
   * first transaction, and frames inside are `[u32 length][pgoutput
-  * message bytes]`. A reader resuming from checkpoint (lsn, seq) skips
-  * every segment whose successor starts at or below the checkpoint,
-  * replays the containing segment from its start, and drops already-
-  * seen messages with the consistency-gate filter — exactly the
+  * message bytes]`. A reader resuming from checkpoint (lsn, seq) starts
+  * at the segment that holds the first row after it, seeded with the
+  * replay state the driver planned for that segment ([[SegPlan]]), and
+  * drops already-seen messages with the consistency-gate filter — the
   * reference's resume path (pkg/source/pulsar.go:122-148 gate;
   * pkg/source/postgres.go:51-163 slot restart).
   *
@@ -136,8 +136,7 @@ object WalFiles {
       startLsn: Long = 0L, startSeq: Int = 0,
       startCommitUs: Long = 0L, tally: SkipTally = null,
       tallyFrom: Checkpoint = Checkpoint.Zero,
-      // the largest checkpoint: lsn compares unsigned
-      tallyTo: Checkpoint = Checkpoint(-1L, Int.MaxValue)): Iterator[WalEvent] = {
+      tallyTo: Checkpoint = Checkpoint.Max): Iterator[WalEvent] = {
     var lsn = startLsn
     var seq = startSeq
     var commitUs = startCommitUs
@@ -191,104 +190,103 @@ object WalFiles {
     }
   }
 
-  /** Per-segment plan for a PARALLEL batch decode of the feed
-    * (`spark.read.format("pgcapture")`): the replay state at the
-    * segment's boundary plus every Relation frame seen before it, so
-    * each executor decodes ONLY its own segment's bytes. The driver
-    * derives the states with a tag-level scan — frame tags and Begin
-    * headers only, no tuple decode. Both wire formats share the tag
-    * alphabet ('B' begin, 'R' relation, I/U/D rows — seq advances once
-    * per row frame, exactly as [[replay]] does); the only layout
-    * difference at plan level is pglogical's flags byte between the
-    * Begin tag and its i64 finalLsn + i64 commitTs header
-    * (reference pkg/decode/pglogical.go:43-75 vs pgoutput.go); a
-    * pgoutput 'T' frame advances seq by its relid count (one control
-    * row per relation in replay). */
+  /** Where replay of one segment starts: the (lsn, seq) and commit time
+    * in force at the segment's first frame, plus the latest Relation
+    * frame of every relation declared before it (in the sidecar catalog
+    * or an earlier segment). A reader seeded with a plan decodes its
+    * segment, and any that follow it, without reading anything else of
+    * the feed: the driver plans, executors replay. */
   final case class SegPlan(path: String, startLsn: Long, startSeq: Int,
-      startCommitUs: Long, relFrames: Seq[Array[Byte]])
+      startCommitUs: Long, relations: Seq[Array[Byte]]) {
+    def start: Checkpoint = Checkpoint(startLsn, startSeq)
+  }
 
-  def planBatch(dir: String, plugin: String = "pgoutput"): Seq[SegPlan] = {
-    val flagsByte = plugin != null && plugin.equalsIgnoreCase("pglogical")
-    var lsn = 0L; var seq = 0; var cus = 0L
-    val rels = scala.collection.mutable.Buffer.empty[Array[Byte]]
-    if (Files.exists(relationsPath(dir)))
-      rels ++= readFrames(relationsPath(dir))
-    segments(dir).map { case (_, p) =>
-      val plan = SegPlan(p.toString, lsn, seq, cus, rels.toSeq)
-      readFrames(p).foreach { f =>
-        if (f.nonEmpty) f(0).toChar match {
-          case 'B' =>
-            val r = new BytesReader(f)
-            r.byte()
-            if (flagsByte) r.byte()
-            lsn = r.int64(); cus = r.int64(); seq = 0
-          case 'I' | 'U' | 'D' => seq += 1
-          case 'T' if !flagsByte =>
-            // pgoutput Truncate fans out one control row per relid
-            // (replay contract); nrels is the Int32 after the tag.
-            // pglogical has no top-level 'T' message — its decoder
-            // would classify one as Unknown (zero rows), so only the
-            // pgoutput plan advances seq here.
-            val r = new BytesReader(f)
-            r.byte()
-            seq += r.int32()
-          case 'M' if !flagsByte =>
-            // pgoutput logical message → one op=MESSAGE control row
-            // (pglogical classifies 'M' as Unknown: zero rows)
-            seq += 1
-          case 'R' => rels += f
-          case _ => ()
-        }
+  /** Index of the plan a replay of the rows after `from` starts at: the
+    * last whose start state is at or before `from` (every earlier
+    * segment's rows are at or before it), else the first. The stream's
+    * batches and the batch scan's `startLsn` prune by this one rule. */
+  def startIndex(plans: collection.Seq[SegPlan], from: Checkpoint): Int =
+    math.max(0, plans.lastIndexWhere(!_.start.after(from)))
+
+  /** Replay state between segments, as [[scan]] advances it. `rels`
+    * holds the last raw 'R' frame per relation id: a decoder keeps one
+    * relation per id, so older declarations of the same id change
+    * nothing and the state stays bounded by the table count. */
+  final case class ScanState(lsn: Long, seq: Int, commitUs: Long,
+      rels: Map[Int, Array[Byte]]) {
+    def planAt(p: Path): SegPlan =
+      SegPlan(p.toString, lsn, seq, commitUs, rels.values.toSeq)
+  }
+
+  private def pglogical(plugin: String): Boolean =
+    plugin != null && plugin.equalsIgnoreCase("pglogical")
+
+  /** The state before a feed's first retained segment: no position yet,
+    * and the relations preserved from truncated history. */
+  def initialState(dir: String, plugin: String): ScanState = {
+    val cat = relationsPath(dir)
+    val empty = ScanState(0L, 0, 0L, Map.empty)
+    if (!Files.exists(cat)) empty
+    else scan(empty, readFrames(cat), plugin)((_, _) => ())
+  }
+
+  /** Advance `st` over one segment's frames with a tag-level scan: frame
+    * tags, Begin headers and Relation ids only, no tuple decode. `onRow`
+    * sees the checkpoint of every row the segment delivers. Both wire
+    * formats share the tag alphabet ('B' begin, 'R' relation, I/U/D
+    * rows, each advancing seq once, exactly as [[replay]] does); at this
+    * level pglogical differs only by a flags byte after the tag
+    * (reference pkg/decode/pglogical.go:43-75 vs pgoutput.go). A pgoutput
+    * 'T' frame advances seq by its relid count and an 'M' frame by one
+    * (one control row each in replay); pglogical has neither message, so
+    * its decoder reads them as Unknown, zero rows. */
+  def scan(st: ScanState, frames: Iterator[Array[Byte]], plugin: String)(
+      onRow: (Long, Int) => Unit): ScanState = {
+    val flagsByte = pglogical(plugin)
+    var lsn = st.lsn; var seq = st.seq; var cus = st.commitUs
+    var rels = st.rels
+    def header(f: Array[Byte]): BytesReader = {
+      val r = new BytesReader(f)
+      r.byte()
+      if (flagsByte) r.byte()
+      r
+    }
+    frames.foreach { f =>
+      if (f.nonEmpty) f(0).toChar match {
+        case 'B' =>
+          val r = header(f)
+          lsn = r.int64(); cus = r.int64(); seq = 0
+        case 'I' | 'U' | 'D' => seq += 1; onRow(lsn, seq)
+        case 'T' if !flagsByte =>
+          seq += header(f).int32(); onRow(lsn, seq)
+        case 'M' if !flagsByte => seq += 1; onRow(lsn, seq)
+        case 'R' => rels = rels.updated(header(f).int32(), f)
+        case _ => ()
       }
+    }
+    ScanState(lsn, seq, cus, rels)
+  }
+
+  /** One plan per segment of the feed, for the parallel batch decode of
+    * `spark.read.format("pgcapture")`: a fold of [[scan]] from the
+    * catalog. */
+  def planBatch(dir: String, plugin: String = "pgoutput"): Seq[SegPlan] = {
+    var st = initialState(dir, plugin)
+    segments(dir).map { case (_, p) =>
+      val plan = st.planAt(p)
+      st = scan(st, readFrames(p), plugin)((_, _) => ())
       plan
     }
   }
 
   /** Decoder for a plugin name (source option `plugin`, A2/A3). */
   def decoderFor(plugin: String): PgOutput.WireDecoder =
-    if (plugin != null && plugin.equalsIgnoreCase("pglogical"))
-      new graft.codec.PgLogical.Decoder()
+    if (pglogical(plugin)) new graft.codec.PgLogical.Decoder()
     else new PgOutput.Decoder
 
-  // Per-segment Relation-frame cache: segments are write-once (atomic
-  // move), so their 'R' frames are immutable — extract them once per
-  // JVM (per executor on a cluster) instead of re-reading every pruned
-  // segment's bytes in every batch's reader (r4 ADVICE: reader-side
-  // I/O must not stay O(total feed) after the driver side went
-  // incremental). Entries are tiny (a few schema frames per segment).
-  private val relFrames =
-    new java.util.concurrent.ConcurrentHashMap[Path, Array[Array[Byte]]]()
-  /** Cache misses = segments actually scanned (instrumentation). */
-  val relScans = new java.util.concurrent.atomic.AtomicLong
-
-  /** Decode ONLY Relation ('R') frames of `segs` into `decoder` — the
-    * state-only replay a resumed reader needs: its segment pruning may
-    * drop segments that declared relations still referenced by later
-    * rows (both wire formats tag relation messages with a leading 'R').
-    * Segment bytes are read at most once per JVM; warm calls replay the
-    * cached frames (bounded by table count, not feed size). */
-  def warmRelations(segs: Seq[Path], decoder: PgOutput.WireDecoder): Unit =
-    segs.foreach { p =>
-      val frames = relFrames.computeIfAbsent(p, { path =>
-        relScans.incrementAndGet()
-        readFrames(path).filter(f => f.nonEmpty && f(0) == 'R').toArray
-      })
-      if (relFrames.size > 8192) relFrames.clear() // stream-lifetime bound
-      frames.foreach(decoder.decode)
-    }
-
   /** Sidecar relation catalog: raw 'R' frames preserved from truncated
-    * segments, replayed into a decoder before any segment bytes. */
+    * segments; [[initialState]] seeds every scan with them. */
   def relationsPath(dir: String): Path = Paths.get(dir, "_relations.seg")
-
-  /** Feed the preserved relation catalog (if any) into `decoder` —
-    * REQUIRED before decoding a feed whose history was truncated:
-    * relations are declared once per recorded stream, and the only copy
-    * may live in a dropped segment. */
-  def warmCatalog(dir: String, decoder: PgOutput.WireDecoder): Unit = {
-    val p = relationsPath(dir)
-    if (Files.exists(p)) readFrames(p).foreach(decoder.decode)
-  }
 
   /** Ack-driven WAL retention (the recycling a standby-status ack
     * enables — reference: the replication slot's restart_lsn advancing
@@ -297,7 +295,15 @@ object WalFiles {
     * preserving their Relation frames in the sidecar catalog first so
     * a later resume can still decode rows of relations declared only
     * in dropped history. Returns the number of segments dropped.
-    * Single-writer maintenance op (run it where the producer runs). */
+    * Single-writer maintenance op (run it where the producer runs).
+    *
+    * Retention belongs to the feed's producer, not to the pipeline:
+    * neither the source nor [[graft.streaming.CdcPipeline]] calls this.
+    * A long-lived feed needs its producer to run it after acks, as the
+    * reference frees WAL when the slot's restart_lsn advances. Without
+    * it the feed grows, and so does the one thing the source still does
+    * per trigger in proportion to the feed: the driver's listing of the
+    * directory ([[WalTail]]), O(retained segments). Readers never list. */
   def truncateAcked(dir: String): Int = readAck(dir) match {
     case None => 0
     case Some(cp) =>

@@ -50,6 +50,13 @@ object CdcPipeline {
     * event reports apply metrics — attach a [[GraftMetricsListener]] via
     * `spark.streams.addListener` for the A38 lag gauge.
     *
+    * WAL retention is not part of the pipeline: the stream acks each
+    * committed batch ([[graft.sources.WalFiles.writeAck]]) but never
+    * deletes segments. A long-lived feed needs its producer to run
+    * [[graft.sources.WalFiles.truncateAcked]] after acks; without it the
+    * source's per-trigger directory listing on the driver grows as
+    * O(retained segments).
+    *
     * When `spark`'s conf leaves Spark's checkpoint-manager setting
     * ([[NioCheckpointFileManager.Key]]) unset, this sets it on that
     * session to [[NioCheckpointFileManager]], so the stream's offset and

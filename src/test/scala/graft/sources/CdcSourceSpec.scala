@@ -198,9 +198,9 @@ class CdcSourceSpec extends AnyFunSuite {
 
   test("resume past pruned segments still knows their relations") {
     // Relation declared ONLY in segment 1; the resume checkpoint lands
-    // past later segment boundaries, so the reader prunes segment 1 —
-    // it must warm decoder state from pruned segments or rows of rel
-    // in new segments throw "unknown relation id" (ADVICE r3 medium).
+    // past later segment boundaries, so the reader skips segment 1 —
+    // the partition's plan must carry the relation or rows of rel in
+    // new segments throw "unknown relation id" (ADVICE r3 medium).
     val walDir = Files.createTempDirectory("walP").toString
     val ckDir = Files.createTempDirectory("ckP").toString
     WalFiles.writeSegment(walDir, 100L,
@@ -311,7 +311,62 @@ class CdcSourceSpec extends AnyFunSuite {
     // startLsn gate applies to batch reads too
     val fromLsn = spark.read.format("pgcapture").option("path", walDir)
       .option("startLsn", java.lang.Long.toHexString(201L)).load()
+    assert(fromLsn.rdd.getNumPartitions == 2, "segment 200 lies wholly before startLsn")
     assert(fromLsn.count() == 2)
+  }
+
+  test("a relation re-declared mid-feed decodes as of each segment, streamed and batch-read") {
+    val walDir = Files.createTempDirectory("walC").toString
+    val ckDir = Files.createTempDirectory("ckC").toString
+    // the same relation id gains a column `w` in segment 2, between two
+    // of its rows; segment 3 uses the new shape without re-declaring it
+    val rel3 = rel.copy(columns = rel.columns :+ C("w", PgType.Int4, isKey = false))
+    def ins3(id: Long): Array[Byte] = PgOutput.Encoder.insert(rel3, Seq(
+      PgType.encode(PgType.Int8, id), PgType.encode(PgType.Int4, 1),
+      PgType.encode(PgType.Int4, 2)))
+    def columns(rows: Seq[org.apache.spark.sql.Row]): Seq[(Long, Set[String])] =
+      rows.map { r =>
+        val nf = r.getMap[String, Array[Byte]](1)
+        (PgType.decode(PgType.Int8, nf("id")).asInstanceOf[Long], nf.keySet.toSet)
+      }
+    val old = Set("id", "v")
+    val added = Set("id", "v", "w")
+    WalFiles.writeSegment(walDir, 100L,
+      PgOutput.Encoder.relation(rel) +: tx(100L, ins(rel, 1, 10)))
+
+    val spark = SparkTestSession.spark
+    val got = scala.collection.mutable.Buffer.empty[(Long, Set[String])]
+    def resume(): Unit = spark.readStream.format("pgcapture")
+      .option("path", walDir).load()
+      .writeStream.option("checkpointLocation", ckDir)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        got ++= columns(batch.select("lsn", "new").collect().toSeq.sortBy(_.getLong(0)))
+        ()
+      }.start().awaitTermination(60000)
+    resume()
+    WalFiles.writeSegment(walDir, 101L, tx(101L, ins(rel, 2, 20)) ++
+      (PgOutput.Encoder.relation(rel3) +: tx(102L, ins3(3))))
+    WalFiles.writeSegment(walDir, 103L, tx(103L, ins3(4)))
+    // the resumed stream's one batch spans the change
+    resume()
+    assert(got == Seq(1L -> old, 2L -> old, 3L -> added, 4L -> added))
+
+    val batch = spark.read.format("pgcapture").option("path", walDir).load()
+    assert(batch.rdd.getNumPartitions == 3)
+    assert(columns(batch.select("lsn", "new").collect().toSeq.sortBy(_.getLong(0))) ==
+      Seq(1L -> old, 2L -> old, 3L -> added, 4L -> added))
+  }
+
+  test("offsets in the parent's JSON form round-trip; trailing content throws") {
+    val written = """{"lsn":-9223372036854775807,"seq":2147483647}"""
+    val o = PgOffset.parse(written)
+    assert(o == PgOffset(Long.MinValue + 1, Int.MaxValue))
+    assert(o.json() == written, "offset logs written before must resume byte-identically")
+    assert(PgOffset.parse("""{"lsn":256,"seq":3}""").cp == Checkpoint(256L, 3))
+    Seq("""{"lsn":1,"seq":2}x""", """{"lsn":1}""", """{"lsn":1,"seq":2,"x":3}""",
+        """{"lsn":"1","seq":2}""", """{"lsn":1,"seq":2147483648}""", "")
+      .foreach(bad => intercept[IllegalArgumentException](PgOffset.parse(bad)))
   }
 
   test("batch read with plugin=pglogical: parallel per-segment decode") {
