@@ -3,7 +3,11 @@
 truth, instead of hand-editing them (the r10 verdict caught the test
 count 29 stale).
 
-  python3 scripts/update_counts.py <sbt-test-log> [round]
+  python3 scripts/update_counts.py <sbt-test-log> [label]
+
+- label: what names the run in the header sentence ("count from the
+  <label> `sbt test` run log"), e.g. a date; without it the label
+  already in COVERAGE.md stays.
 
 - query count: counted from the QueryDef registry in src/main (the
   same registry Verify iterates), plus the dense id range q01..qMAX.
@@ -50,7 +54,7 @@ def main():
         sys.exit(__doc__)
     nq, qmax = query_counts()
     nt, ns, nc = test_counts(sys.argv[1])
-    rnd = sys.argv[2] if len(sys.argv) > 2 else None
+    label = sys.argv[2] if len(sys.argv) > 2 else None
     cov = ROOT / "COVERAGE.md"
     text = cov.read_text()
     text = re.sub(
@@ -61,9 +65,9 @@ def main():
     # matching, leaving the header stale (the exact failure mode this
     # script exists to prevent)
     text, n_subs = re.subn(
-        r"\(\d+ tests /\n\d+ suites — count from the round-\d+ `sbt test` run log: \d+/\d+ green([;,])",
-        f"({nt} tests /\n{ns} suites — count from the round-{rnd or 'N'} `sbt test` run log: "
-        f"{nt}/{nt} green\\1", text)
+        r"\(\d+ tests /\n\d+ suites — count from the (.+?) `sbt test` run log: \d+/\d+ green([;,])",
+        lambda m: f"({nt} tests /\n{ns} suites — count from the {label or m.group(1)} "
+                  f"`sbt test` run log: {nt}/{nt} green{m.group(2)}", text)
     if n_subs == 0:
         sys.exit("COVERAGE.md header sentence did not match — fix the "
                  "pattern instead of letting the counts go stale")

@@ -6,6 +6,7 @@ import scala.util.Try
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import graft.cdc.Checkpoint
+import graft.codec.PgOutput
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
@@ -30,10 +31,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * One ordered input partition per batch: logical replication is a
   * strictly ordered single stream (SURVEY §4 "shuffle/partitioning");
-  * parallelism happens downstream of the ordered apply, not here. A
-  * batch with no new WAL is an empty range — the keepalive behavior
-  * (A9). `commit(end)` persists standby-status feedback like
-  * `setFlushedLSN` (A10).
+  * parallelism happens downstream of the ordered apply, not here. (One
+  * partition per segment, decoded in parallel, was measured on
+  * perfbench's `cdc_oltp` and was slower: its batches are a few small
+  * transactions.) A batch with no new WAL is an empty range — the
+  * keepalive behavior (A9). `commit(end)` persists standby-status
+  * feedback like `setFlushedLSN` (A10).
+  *
+  * Per trigger the driver lists the feed directory once, and the reader
+  * builds each relation's constant envelope parts once
+  * ([[PgWalRows]]), not once per row.
   *
   * Options: `path` = WAL feed directory ([[WalFiles]] layout);
   * `tables` = optional regex limiting captured tables (publication
@@ -167,18 +174,26 @@ final class PgCaptureMicroBatchStream(dir: String, tablesRegex: Option[String],
   // prunes it per batch (unbounded mode would leak one entry per tx).
   private val tail = new WalTail(dir, plugin, trackTx = maxChanges.isDefined)
 
-  // Trigger.AvailableNow: pin the end of "available" WAL once at query
-  // start so the run drains to a fixed checkpoint and stops (A9/A14).
+  // Trigger.AvailableNow: pin the end of "available" WAL at query start,
+  // to the end the first trigger's listing finds, so the run drains to a
+  // fixed checkpoint and stops (A9/A14). Every trigger lists the feed at
+  // most once: `bounded` or `last` lists, and the end, the pinned end and
+  // the reported latest offset read what that listing saw.
+  private var pinEnd = false
   private var availableEnd: Option[Checkpoint] = None
 
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableEnd = Some(tail.last())
+  override def prepareForTriggerAvailableNow(): Unit = pinEnd = true
+
+  private def end(seen: Checkpoint): Checkpoint = availableEnd.getOrElse {
+    if (pinEnd) availableEnd = Some(seen)
+    seen
+  }
 
   override def initialOffset(): Offset =
     PgOffset(startLsn.map(Checkpoint(_, 0)).getOrElse(Checkpoint.Zero))
 
   override def latestOffset(): Offset =
-    PgOffset(availableEnd.getOrElse(tail.last()))
+    PgOffset(availableEnd.getOrElse(end(tail.last())))
 
   // SupportsAdmissionControl (via SupportsTriggerAvailableNow):
   // maxChangesPerBatch bounds each micro-batch, never splitting a
@@ -201,14 +216,13 @@ final class PgCaptureMicroBatchStream(dir: String, tablesRegex: Option[String],
     }
     cap match {
       case Some(n) =>
-        val from = start.asInstanceOf[PgOffset].cp
-        val capped = tail.bounded(from, n)
-        val end = availableEnd.getOrElse(tail.last())
-        PgOffset(if (capped.after(end)) end else capped)
+        val capped = tail.bounded(start.asInstanceOf[PgOffset].cp, n)
+        val last = end(tail.seen)
+        PgOffset(if (capped.after(last)) last else capped)
       case None => latestOffset()
     }
   }
-  override def reportLatestOffset(): Offset = PgOffset(tail.last())
+  override def reportLatestOffset(): Offset = PgOffset(tail.seen)
 
   override def deserializeOffset(json: String): Offset = PgOffset.parse(json)
 
@@ -262,6 +276,7 @@ final class PgWalPartitionReader(p: PgWalPartition)
   p.plan.relations.foreach(decoder.decode)
 
   private val tally = new WalFiles.SkipTally
+  private val rows = new PgWalRows
 
   // replay order is checkpoint order: stop at the batch end instead of
   // decoding the rest of the feed
@@ -289,7 +304,7 @@ final class PgWalPartitionReader(p: PgWalPartition)
     } else false
   }
 
-  override def get(): InternalRow = PgWalRows.toRow(current)
+  override def get(): InternalRow = rows.toRow(current)
 
   override def currentMetricsValues(): Array[CustomTaskMetric] =
     PgScanMetrics.values(tally)
@@ -325,31 +340,60 @@ private[sources] object PgScanMetrics {
     })
 }
 
-/** Envelope row construction of the reader. */
-private[sources] object PgWalRows {
+/** Envelope row construction of one reader. The decoder keeps one
+  * `Relation` object per relation id (re-declaring a relation replaces
+  * it), so a row's per-relation parts — namespace and table, the `oids`
+  * map, the `keys` array and the column names in sorted order — are
+  * built once per relation, keyed by identity, not once per row. */
+private[sources] final class PgWalRows {
+  private final class Parts(rel: PgOutput.Relation) {
+    val namespace: UTF8String = UTF8String.fromString(rel.namespace)
+    val table: UTF8String = UTF8String.fromString(rel.name)
+    val oids = new ArrayBasedMapData(
+      new GenericArrayData(rel.columns.map(c => UTF8String.fromString(c.name): Any).toArray),
+      new GenericArrayData(rel.columns.map(c => c.oid: Any).toArray))
+    val keys = new GenericArrayData(rel.columns.filter(_.isKey)
+      .map(c => UTF8String.fromString(c.name): Any).toArray)
+    val names: Array[String] = rel.columns.map(_.name).distinct.toArray.sorted
+    val utf8Names: Array[Any] = names.map(UTF8String.fromString)
+  }
+  private val parts = new java.util.IdentityHashMap[PgOutput.Relation, Parts]
+  private val Absent = new Array[Byte](0)
+
   def toRow(e: WalFiles.WalEvent): InternalRow = {
     val ch = e.change
-    val rel = ch.rel
-    def mapData(m: Option[Map[String, Array[Byte]]]) = m.map { mm =>
-      val ks = mm.keys.toArray.sorted
-      new ArrayBasedMapData(
-        new GenericArrayData(ks.map(k => UTF8String.fromString(k): Any)),
-        new GenericArrayData(ks.map(k => mm(k): Any)))
-    }.orNull
-    val oids = {
-      val cols = rel.columns.toArray
-      new ArrayBasedMapData(
-        new GenericArrayData(cols.map(c => UTF8String.fromString(c.name): Any)),
-        new GenericArrayData(cols.map(c => c.oid: Any)))
-    }
+    var p = parts.get(ch.rel)
+    if (p == null) { p = new Parts(ch.rel); parts.put(ch.rel, p) }
     new GenericInternalRow(Array[Any](
       UTF8String.fromString(ch.op),
-      UTF8String.fromString(rel.namespace),
-      UTF8String.fromString(rel.name),
-      mapData(ch.newTuple), mapData(ch.oldTuple), oids,
+      p.namespace, p.table,
+      mapData(ch.newTuple, p), mapData(ch.oldTuple, p), p.oids,
       e.cp.lsn, e.cp.seq,
       e.commitTimeUs + graft.codec.PgType.PgEpochMicros,
-      new GenericArrayData(rel.columns.filter(_.isKey)
-        .map(c => UTF8String.fromString(c.name): Any).toArray)))
+      p.keys))
   }
+
+  /** A tuple image as a map in sorted key order: picked along the
+    * relation's sorted columns, or sorted here when the image holds a
+    * key that is not among them. */
+  private def mapData(m: Option[Map[String, Array[Byte]]], p: Parts): ArrayBasedMapData =
+    m.map { mm =>
+      val ks = new Array[Any](mm.size)
+      val vs = new Array[Any](mm.size)
+      var n = 0
+      var i = 0
+      while (i < p.names.length && n < ks.length) {
+        val v = mm.getOrElse(p.names(i), Absent)
+        if (v ne Absent) { ks(n) = p.utf8Names(i); vs(n) = v; n += 1 }
+        i += 1
+      }
+      if (n == ks.length)
+        new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(vs))
+      else {
+        val sorted = mm.keys.toArray.sorted
+        new ArrayBasedMapData(
+          new GenericArrayData(sorted.map(k => UTF8String.fromString(k): Any)),
+          new GenericArrayData(sorted.map(k => mm(k): Any)))
+      }
+    }.orNull
 }

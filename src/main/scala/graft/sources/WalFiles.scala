@@ -3,6 +3,8 @@ package graft.sources
 import java.io.{BufferedInputStream, BufferedOutputStream, FileInputStream, FileOutputStream}
 import java.nio.file.{Files, Path, Paths}
 
+import scala.collection.mutable
+
 import graft.cdc.Checkpoint
 import graft.codec.{BytesReader, BytesWriter, PgOutput, PgType}
 
@@ -140,6 +142,9 @@ object WalFiles {
     var lsn = startLsn
     var seq = startSeq
     var commitUs = startCommitUs
+    // one relation object per message prefix, as the decoder keeps one
+    // per relation id: readers build a relation's envelope parts once
+    val messageRels = mutable.HashMap.empty[String, PgOutput.Relation]
     segs.iterator.flatMap(readFrames).flatMap { frame =>
       decoder.decode(frame) match {
         case PgOutput.Begin(finalLsn, ts, _) =>
@@ -168,7 +173,8 @@ object WalFiles {
           // the last transaction's (lsn, seq+1) — monotone and dense.
           seq += 1
           Some(WalEvent(Checkpoint(lsn, seq), commitUs,
-            PgOutput.Change("MESSAGE", messageRel(prefix), Some(Map(
+            PgOutput.Change("MESSAGE",
+              messageRels.getOrElseUpdate(prefix, messageRel(prefix)), Some(Map(
               "content" -> content,
               "transactional" -> PgType.encode(PgType.Bool, txn),
               "message_lsn" -> PgType.encode(PgType.Int8, msgLsn))),

@@ -54,6 +54,7 @@ final class WalTail(dir: String, plugin: String = "pgoutput",
   /** Scan any newly-appeared segments into the tail state. */
   def advance(): Unit = synchronized {
     val segs = WalFiles.segments(dir)
+    WalTail.listings.incrementAndGet()
     // Segments must appear in increasing firstLsn order (write-once,
     // atomic move). If one lands inside the planned range but is not
     // planned (slow concurrent producer), scanning it now would feed
@@ -87,6 +88,10 @@ final class WalTail(dir: String, plugin: String = "pgoutput",
 
   /** Checkpoint of the last change in the feed (latestOffset). */
   def last(): Checkpoint = { advance(); lastCp }
+
+  /** Checkpoint of the last change scanned so far, without listing the
+    * feed: the end that the latest `last` or `bounded` saw. */
+  def seen: Checkpoint = synchronized(lastCp)
 
   /** Checkpoint after at most `maxChanges` changes beyond `from`, never
     * splitting a transaction (batch boundaries are commit boundaries —
@@ -134,4 +139,12 @@ final class WalTail(dir: String, plugin: String = "pgoutput",
     plans.remove(0, startIndex(end))
     plans.headOption.foreach { case (first, _) => floor = first }
   }
+}
+
+object WalTail {
+  /** Feed directory listings by every tail in this JVM, one per
+    * `advance`: the source's only per-trigger cost that grows with the
+    * feed (O(retained segments)). Instrumentation, like
+    * [[WalFiles.truncateFrames]]. */
+  val listings = new java.util.concurrent.atomic.AtomicLong
 }

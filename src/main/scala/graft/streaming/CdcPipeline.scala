@@ -1,8 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.unsafe.Platform
 
 /** Pipeline composition (A37, reference cmd/root.go:46-79
   * `sourceToSink`): `readStream.format("pgcapture")` → ordered
@@ -21,23 +27,92 @@ object CdcPipeline {
     * (each consumer filters and sorts its own slice by (lsn, seq)).
     * The collect runs on the executor/driver boundary — the ordered
     * apply is inherently single-writer (A22); upstream decode and
-    * routing stay distributed. One action only: a second would re-read
-    * and re-decode the offset range's segments. */
+    * routing stay distributed.
+    *
+    * One planning pass and one job per trigger. `foreachBatch` hands
+    * over the micro-batch's own RDD, already planned, wrapped in a
+    * `LogicalRDD`; the job runs it as is, so the micro-batch's scan and
+    * `observe()` node run inside it, and nothing plans the wrapper. Any
+    * other frame runs its own executed plan. Each [[CdcApplier.Change]]
+    * is read from the collected `InternalRow`s directly, with no `Row`
+    * encoder: a NULL datum stays a present key with a null value, an
+    * unchanged-TOAST column stays absent. */
   def toChanges(batch: DataFrame): Seq[CdcApplier.Change] = {
-    def m(r: Row, i: Int): Map[String, Array[Byte]] =
-      if (r.isNullAt(i)) Map.empty
-      else r.getMap[String, Array[Byte]](i).toMap
-    batch
-      .select("op", "schema", "table", "new", "old", "oids", "lsn", "seq", "keys")
-      .collect()
-      .map { r =>
-        CdcApplier.Change(r.getString(0), r.getString(1), r.getString(2),
-          m(r, 3), m(r, 4),
-          if (r.isNullAt(5)) Map.empty else r.getMap[String, Int](5).toMap,
-          r.getLong(6), r.getInt(7),
-          keys = if (r.isNullAt(8)) None else Some(r.getSeq[String](8).toList))
+    val Array(op, schema, table, nw, old, oids, lsn, seq, keys) =
+      Array("op", "schema", "table", "new", "old", "oids", "lsn", "seq", "keys")
+        .map(batch.schema.fieldIndex)
+    def strings(a: ArrayData, n: Int): Iterator[String] =
+      Iterator.range(0, n).map(a.getUTF8String(_).toString)
+    def bytesMap(r: InternalRow, i: Int): Map[String, Array[Byte]] =
+      if (r.isNullAt(i)) Map.empty else {
+        val m = r.getMap(i)
+        val vs = m.valueArray()
+        strings(m.keyArray(), m.numElements()).zipWithIndex.map { case (k, j) =>
+          k -> (if (vs.isNullAt(j)) null else vs.getBinary(j))
+        }.toMap
       }
-      .toSeq
+    collect(batch).map { r =>
+      CdcApplier.Change(r.getUTF8String(op).toString,
+        r.getUTF8String(schema).toString, r.getUTF8String(table).toString,
+        bytesMap(r, nw), bytesMap(r, old),
+        if (r.isNullAt(oids)) Map.empty else {
+          val m = r.getMap(oids)
+          val vs = m.valueArray()
+          strings(m.keyArray(), m.numElements()).zipWithIndex
+            .map { case (k, j) => k -> vs.getInt(j) }.toMap
+        },
+        r.getLong(lsn), r.getInt(seq),
+        keys = if (r.isNullAt(keys)) None else {
+          val a = r.getArray(keys)
+          Some(strings(a, a.numElements()).toList)
+        })
+    }
+  }
+
+  /** The frame's rows, in partition order, from one job. The job runs
+    * through `SparkContext.runJob` with a function declared here: the
+    * closure cleaner then reads this small class, not `RDD`'s and
+    * `SparkContext`'s, which `RDD.collect` makes it read every trigger.
+    * Each task ships its rows as one byte array, as Spark's own collect
+    * does, so no row passes through Java serialization. */
+  private def collect(batch: DataFrame): Seq[InternalRow] = {
+    val rdd = batch.queryExecution.logical match {
+      case l: LogicalRDD => l.rdd
+      case _ => batch.queryExecution.toRdd
+    }
+    val parts = new Array[Array[Byte]](rdd.getNumPartitions)
+    batch.sparkSession.sparkContext.runJob(rdd, encodeRows, parts.indices,
+      (i: Int, bytes: Array[Byte]) => parts(i) = bytes)
+    val numFields = batch.schema.length
+    parts.toSeq.flatMap(decodeRows(_, numFields))
+  }
+
+  /** A partition's rows as (size, bytes) pairs. Executed plans produce
+    * `UnsafeRow`s; Spark's collect relies on the same. */
+  private val encodeRows = (_: TaskContext, rows: Iterator[InternalRow]) => {
+    val bytes = new java.io.ByteArrayOutputStream
+    val out = new java.io.DataOutputStream(bytes)
+    val buffer = new Array[Byte](4096)
+    rows.foreach { r =>
+      val row = r.asInstanceOf[UnsafeRow]
+      out.writeInt(row.getSizeInBytes)
+      row.writeToStream(out, buffer)
+    }
+    out.flush()
+    bytes.toByteArray
+  }
+
+  private def decodeRows(bytes: Array[Byte], numFields: Int): Seq[InternalRow] = {
+    val rows = Seq.newBuilder[InternalRow]
+    val in = java.nio.ByteBuffer.wrap(bytes)
+    while (in.hasRemaining) {
+      val size = in.getInt
+      val row = new UnsafeRow(numFields)
+      row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + in.position(), size)
+      rows += row
+      in.position(in.position() + size)
+    }
+    rows.result()
   }
 
   /** Start the capture→apply pipeline over a WAL feed directory.
